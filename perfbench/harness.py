@@ -16,10 +16,6 @@ import threading
 import time
 from dataclasses import dataclass
 
-# Stage names Spark gives the footer-inference job of ``spark.read.parquet``.
-INFER_STAGE_PREFIX = "parquet at "
-
-
 def sf_dir() -> str:
     """The sf0.1 star-schema tables: the ``sf0.1`` directory beside the
     smoke-test tables the repository's entry module names (TESTDATA.md)."""
@@ -95,7 +91,6 @@ class Span:
     stages: int = 0
     tasks: int = 0
     failed_tasks: int = 0
-    infer_jobs: int = 0
 
     @property
     def secs(self) -> float:
@@ -162,8 +157,6 @@ class Tracer:
                 st = self.status.getStageInfo(sid)
                 if st is None:
                     continue
-                if st.name.startswith(INFER_STAGE_PREFIX):
-                    span.infer_jobs += 1
                 # skipped stages (shuffle output reused) ran no tasks
                 if st.numCompletedTasks or st.numFailedTasks:
                     span.stages += 1
@@ -196,3 +189,8 @@ class Tracer:
 
     def total(self, spans, field: str) -> int:
         return sum(getattr(s, field) for s in spans)
+
+    def inside(self, outer, field: str = "jobs") -> int:
+        """``field`` summed over each span of ``outer`` and every span
+        nested in its time window."""
+        return sum(self.total(self.within(s.start, s.end), field) for s in outer)
