@@ -28,7 +28,8 @@ Operations map 1:1 to SURVEY §2.10:
 Scale note: the metadata layer is O(#snapshots) tiny JSON; data paths
 are plain parquet dirs, so at 100 TB reads keep vectorized scans,
 pushdown and partition pruning — the pointer indirection adds one stat()
-per query.
+per query. Like Iceberg, each snapshot record keeps its table schema, so
+resolving a read needs no Spark job over the file footers.
 """
 
 from __future__ import annotations
@@ -44,22 +45,58 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+# footer key under which Spark's parquet writer stores the exact Spark
+# schema of the data columns it wrote (partition columns live in paths)
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 
-def _footer_row_count(snap_dir: str) -> int:
-    """Sum parquet-footer row counts — no data read, no Spark job."""
-    import pyarrow.parquet as pq
+def _as_nullable(t):
+    """A JSON-form Spark type with every nullability flag set, as a
+    Spark file read does to any file schema (``asNullable``): footers
+    that differ only in nullability describe the same read schema."""
+    if isinstance(t, list):
+        return [_as_nullable(x) for x in t]
+    if not isinstance(t, dict):
+        return t
+    out = {k: _as_nullable(v) for k, v in t.items()}
+    for flag in ("nullable", "containsNull", "valueContainsNull"):
+        if flag in out:
+            out[flag] = True
+    return out
 
-    total = 0
-    for root, _dirs, files in os.walk(snap_dir):
-        rel = os.path.relpath(root, snap_dir)
+
+def _data_files(data_dir: str) -> list[str]:
+    """The parquet data files under ``data_dir``, sorted."""
+    files = []
+    for root, _dirs, fs in os.walk(data_dir):
+        rel = os.path.relpath(root, data_dir)
         # metadata side-dirs (_deletes, _upserts, ...) are not base data
         if rel != "." and any(p.startswith("_") for p in rel.split(os.sep)):
             continue
-        for f in files:
-            if f.endswith(".parquet"):
-                total += pq.ParquetFile(os.path.join(root, f)).metadata.num_rows
-    return total
+        files += [os.path.join(root, f) for f in fs if f.endswith(".parquet")]
+    return sorted(files)
+
+
+def _footer_meta(data_dir: str) -> tuple[int, dict | None]:
+    """Row count and Spark data schema (JSON form) of the parquet files
+    under ``data_dir``, from their footers alone — no data read, no
+    Spark job. The schema is None when a file lacks Spark's schema key
+    or the files disagree; readers then fall back to inference."""
+    import pyarrow.parquet as pq
+
+    total, schemas = 0, set()
+    for path in _data_files(data_dir):
+        md = pq.ParquetFile(path).metadata
+        total += md.num_rows
+        raw = (md.metadata or {}).get(_SPARK_SCHEMA_KEY)
+        schemas.add(
+            json.dumps(_as_nullable(json.loads(raw)), sort_keys=True) if raw else None
+        )
+    if len(schemas) != 1 or None in schemas:
+        return total, None
+    return total, json.loads(schemas.pop())
 
 
 def partition_transform(spec: str, dtype: str | None = None):
@@ -199,6 +236,12 @@ class Snapshot:
     # level rewrites (DELETE/UPDATE/MERGE/compact) inherit it so one
     # GDPR delete can't silently flatten a date-partitioned table.
     partition_by: list | None = None
+    # Spark schema (JSON form) of the base files' data columns, read at
+    # commit from the key Spark writes into every footer. Reads pass it
+    # to .schema(...) instead of inferring it with a Spark job; None
+    # (files disagree, no footer, or recorded before this field)
+    # falls back to inference.
+    data_schema: dict | None = None
 
 
 class CommitConflictError(RuntimeError):
@@ -299,7 +342,6 @@ class SnapshotCatalog:
         operation: str,
         delete_path: str | None = None,
         delete_key_cols: list[str] | None = None,
-        row_count: int | None = None,
         mixed_schema: bool = False,
         upsert_layers: list[str] | None = None,
         upsert_key_cols: list[str] | None = None,
@@ -309,13 +351,21 @@ class SnapshotCatalog:
     ) -> Snapshot:
         """Atomic pointer swap: temp file + rename (same protocol shape
         as Iceberg's metadata pointer update). On conflict the caller's
-        snapshot directory is removed — no orphan data dirs."""
+        snapshot directory is removed — no orphan data dirs.
+
+        One pass over the base files' footers, BEFORE the pointer swap,
+        gives the persisted record its row count and data schema. Both
+        come from the files themselves, so commits that carry files
+        forward (rollback, branch fork, rename/drop, MOR layers) need
+        no bookkeeping. The row count stays unknown while merge-on-read
+        layers or deletes are pending (footers can't see them)."""
+        footer_rows, data_schema = _footer_meta(snap_dir)
         snap = Snapshot(
             version=version,
             path=snap_dir,
             operation=operation,
             timestamp_ms=int(time.time() * 1000),
-            row_count=row_count,
+            row_count=None if (delete_path or upsert_layers) else footer_rows,
             delete_path=delete_path,
             delete_key_cols=delete_key_cols,
             mixed_schema=mixed_schema,
@@ -324,6 +374,7 @@ class SnapshotCatalog:
             renames=renames or None,
             dropped=dropped or None,
             partition_by=list(partition_by) if partition_by else None,
+            data_schema=data_schema,
         )
         # optimistic concurrency: the version we computed must still be
         # next-in-line; a concurrent committer makes this a conflict,
@@ -490,16 +541,8 @@ class SnapshotCatalog:
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(snap_dir)
-        # row count comes from footers BEFORE the pointer swap so the
-        # persisted snapshot/log record carries it
-        row_count = _footer_row_count(snap_dir)
         return self._register_snapshot(
-            name,
-            version,
-            snap_dir,
-            operation,
-            row_count=row_count,
-            partition_by=partition_by,
+            name, version, snap_dir, operation, partition_by=partition_by
         )
 
     # ---- public write paths --------------------------------------------
@@ -637,7 +680,9 @@ class SnapshotCatalog:
         touched_strs = {_partition_dir_value(v) for v in vals}
         linked = 0
         new_cols = set(merged.columns)
-        prev_cols = set(self.spark.read.parquet(prev.path).columns)
+        # prev has no MOR or rename/drop state here (materialized above),
+        # so the target read's columns are exactly its files' columns
+        prev_cols = set(target.columns)
         for entry in prev_part_dirs:
             val = urllib.parse.unquote(entry[len(part_prefix):])
             if val in touched_strs:
@@ -646,14 +691,14 @@ class SnapshotCatalog:
             linked += 1
         # carried-forward files keep the previous schema; if the rewrite
         # evolved it (or the prev snapshot was already mixed), flag the
-        # snapshot so read() merges footers instead of sampling one
+        # snapshot so read() merges all footers instead of trusting one
+        # recorded schema
         mixed = linked > 0 and (new_cols != prev_cols or prev.mixed_schema)
         return self._register_snapshot(
             name,
             version,
             snap_dir,
             f"merge-partitioned(rewrote={len(touched_strs)},linked={linked})",
-            row_count=_footer_row_count(snap_dir),
             mixed_schema=mixed,
             partition_by=[partition_col],
         )
@@ -707,7 +752,7 @@ class SnapshotCatalog:
             )
         new_deletes = keys_df.select(*key_cols)
         if prev.delete_path and os.path.isdir(prev.delete_path):
-            prev_dels = self.spark.read.parquet(prev.delete_path).select(*key_cols)
+            prev_dels = self._read_side_dir(prev.delete_path).select(*key_cols)
             new_deletes = prev_dels.unionByName(new_deletes).distinct()
 
         version, snap_dir = self._new_snapshot_dir(name, prev.version + 1)
@@ -769,13 +814,7 @@ class SnapshotCatalog:
         if os.path.exists(stale_stats):
             os.remove(stale_stats)
         self._write_options(name, source.write.mode("append")).parquet(snap_dir)
-        return self._register_snapshot(
-            name,
-            version,
-            snap_dir,
-            "append",
-            row_count=_footer_row_count(snap_dir),
-        )
+        return self._register_snapshot(name, version, snap_dir, "append")
 
     def upsert_by_keys(
         self, name: str, source: DataFrame, key_cols: list[str]
@@ -833,7 +872,7 @@ class SnapshotCatalog:
         delete_key_cols = prev.delete_key_cols
         if prev.delete_path and os.path.isdir(prev.delete_path):
             remaining = (
-                self.spark.read.parquet(prev.delete_path)
+                self._read_side_dir(prev.delete_path)
                 .join(source.select(*key_cols).distinct(), key_cols, "left_anti")
             )
             del_dir = os.path.join(snap_dir, "_deletes")
@@ -881,18 +920,20 @@ class SnapshotCatalog:
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(sdir)
+        row_count, data_schema = _footer_meta(sdir)
         return Snapshot(
             version=-1,
             path=sdir,
             operation="staged",
             timestamp_ms=int(time.time() * 1000),
-            row_count=_footer_row_count(sdir),
+            row_count=row_count,
             base_version=cur.version if cur else 0,
             partition_by=partition_by,
+            data_schema=data_schema,
         )
 
     def read_staged(self, staged: Snapshot) -> DataFrame:
-        return self.spark.read.parquet(staged.path)
+        return self._read_base(staged)
 
     def publish(self, name: str, staged: Snapshot) -> Snapshot:
         """WAP step 3: promote the staged snapshot — one rename into
@@ -917,7 +958,6 @@ class SnapshotCatalog:
             version,
             snap_dir,
             "publish",
-            row_count=staged.row_count,
             partition_by=staged.partition_by,
         )
 
@@ -1095,7 +1135,6 @@ class SnapshotCatalog:
             new_version,
             snap_dir,
             f"rollback(to=v{version})",
-            row_count=old.row_count,
             delete_path=delete_path,
             delete_key_cols=old.delete_key_cols if delete_path else None,
             mixed_schema=old.mixed_schema,
@@ -1359,18 +1398,57 @@ class SnapshotCatalog:
     def _read_snapshot(self, snap: Snapshot) -> DataFrame:
         """Build the DataFrame for a specific snapshot — the basis the
         read-modify-write commit paths pin their expected_version to."""
+        return self._apply_mor(self._read_base(snap), snap)
+
+    def _parquet(
+        self,
+        paths: list[str],
+        data_schema: dict | None,
+        merge: bool = False,
+        base_path: str | None = None,
+    ) -> DataFrame:
+        """The one place the catalog reads its parquet files.
+
+        A known data schema is passed to ``.schema(...)``: Spark then
+        resolves the relation from metadata and launches no
+        footer-inference job; partition columns are still discovered
+        from the paths, as under inference. The schema is trusted, not
+        checked: a file replaced out-of-band with a different schema
+        fails when the scan runs, not here. ``merge`` (files of two
+        schema generations) and an unknown schema keep inference."""
         reader = self.spark.read
-        if snap.mixed_schema:
-            # footer-merge only when the snapshot is known to carry two
-            # schema generations — the common single-schema path keeps
-            # the cheap sample-one-footer resolution
+        if base_path is not None:
+            reader = reader.option("basePath", base_path)
+        if merge:
             reader = reader.option("mergeSchema", "true")
-        df = self._apply_schema_meta(reader.parquet(snap.path), snap)
-        # merge-on-read upsert layers, oldest first: shadow older rows
-        # on the layer's keys, then union the layer (latest wins)
+        elif data_schema is not None:
+            reader = reader.schema(StructType.fromJson(data_schema))
+        return reader.parquet(*paths)
+
+    def _read_base(self, snap: Snapshot, files: list[str] | None = None) -> DataFrame:
+        """``snap``'s base files — all, or the pruned ``files`` — under
+        the current column names, without merge-on-read state."""
+        if files is None:
+            df = self._parquet([snap.path], snap.data_schema, snap.mixed_schema)
+        else:
+            df = self._parquet(
+                files, snap.data_schema, snap.mixed_schema, base_path=snap.path
+            )
+        return self._apply_schema_meta(df, snap)
+
+    def _read_side_dir(self, path: str) -> DataFrame:
+        """An upsert-layer or delete-key dir, read with the schema in
+        its own footers (looked up now: these dirs are small and their
+        schema is not kept in the snapshot record)."""
+        return self._parquet([path], _footer_meta(path)[1])
+
+    def _apply_mor(self, df: DataFrame, snap: Snapshot) -> DataFrame:
+        """Fold ``snap``'s merge-on-read state into its base rows."""
+        # upsert layers, oldest first: shadow older rows on the layer's
+        # keys, then union the layer (latest wins)
         for layer_rel in snap.upsert_layers or []:
             layer = self._apply_schema_meta(
-                self.spark.read.parquet(os.path.join(snap.path, layer_rel)), snap
+                self._read_side_dir(os.path.join(snap.path, layer_rel)), snap
             )
             df = df.join(
                 layer.select(*snap.upsert_key_cols).distinct(),
@@ -1378,22 +1456,14 @@ class SnapshotCatalog:
                 "left_anti",
             ).unionByName(layer, allowMissingColumns=True)
         if snap.delete_path and os.path.isdir(snap.delete_path):
-            dels = self._apply_schema_meta(
-                self.spark.read.parquet(snap.delete_path), snap
-            )
+            dels = self._apply_schema_meta(self._read_side_dir(snap.delete_path), snap)
             df = df.join(dels, snap.delete_key_cols, "left_anti")
         return df
 
     # ---- Iceberg-manifest-style file pruning -----------------------------
 
     def _base_data_files(self, snap: Snapshot) -> list[str]:
-        files = []
-        for root, _dirs, fs in os.walk(snap.path):
-            rel = os.path.relpath(root, snap.path)
-            if rel != "." and any(p.startswith("_") for p in rel.split(os.sep)):
-                continue
-            files += [os.path.join(root, f) for f in fs if f.endswith(".parquet")]
-        return sorted(files)
+        return _data_files(snap.path)
 
     def _file_stats(self, snap: Snapshot) -> dict:
         """Per-file column min/max from parquet footers — the manifest
@@ -1524,32 +1594,11 @@ class SnapshotCatalog:
         MOR layers and delete files are still applied in full; the
         residual filter keeps row-level exactness either way."""
         snap, keep, _total = self.scan_files(name, filters, version)
-        if not keep:
-            # empty schema-stable base — but MOR layers below must STILL
-            # be applied: matching rows may live only in _upserts dirs
-            reader = self.spark.read
-            if snap.mixed_schema:
-                reader = reader.option("mergeSchema", "true")
-            df = self._apply_schema_meta(reader.parquet(snap.path), snap).limit(0)
-        else:
-            reader = self.spark.read.option("basePath", snap.path)
-            if snap.mixed_schema:
-                reader = reader.option("mergeSchema", "true")
-            df = self._apply_schema_meta(reader.parquet(*keep), snap)
-        for layer_rel in snap.upsert_layers or []:
-            layer = self._apply_schema_meta(
-                self.spark.read.parquet(os.path.join(snap.path, layer_rel)), snap
-            )
-            df = df.join(
-                layer.select(*snap.upsert_key_cols).distinct(),
-                snap.upsert_key_cols,
-                "left_anti",
-            ).unionByName(layer, allowMissingColumns=True)
-        if snap.delete_path and os.path.isdir(snap.delete_path):
-            dels = self._apply_schema_meta(
-                self.spark.read.parquet(snap.delete_path), snap
-            )
-            df = df.join(dels, snap.delete_key_cols, "left_anti")
+        # no surviving file: an empty schema-stable base — but the MOR
+        # layers must STILL be applied: matching rows may live only in
+        # _upserts dirs
+        base = self._read_base(snap, keep) if keep else self._read_base(snap).limit(0)
+        df = self._apply_mor(base, snap)
         cmp = {
             "=": lambda c, v: c == v,
             "==": lambda c, v: c == v,
@@ -1671,7 +1720,6 @@ class SnapshotCatalog:
             new_version,
             snap_dir,
             operation,
-            row_count=src.row_count,
             delete_path=delete_path,
             delete_key_cols=src.delete_key_cols if delete_path else None,
             mixed_schema=src.mixed_schema,
@@ -1839,15 +1887,7 @@ class SnapshotCatalog:
         """On-disk bytes of the snapshot's base data files (metadata
         only — file stats, no scan)."""
         snap = self._resolve(name, version, None)
-        total = 0
-        for root, _dirs, files in os.walk(snap.path):
-            rel = os.path.relpath(root, snap.path)
-            if rel != "." and any(p.startswith("_") for p in rel.split(os.sep)):
-                continue
-            for f in files:
-                if f.endswith(".parquet"):
-                    total += os.path.getsize(os.path.join(root, f))
-        return total
+        return sum(os.path.getsize(f) for f in _data_files(snap.path))
 
     @staticmethod
     def _zvalue(cols: list, mins: dict, maxs: dict, bits: int = 16):
@@ -1971,14 +2011,7 @@ class SnapshotCatalog:
 
     def file_count(self, name: str, version: int | None = None) -> int:
         """Number of base data files in the snapshot (metadata only)."""
-        snap = self._resolve(name, version, None)
-        n = 0
-        for root, _dirs, files in os.walk(snap.path):
-            rel = os.path.relpath(root, snap.path)
-            if rel != "." and any(p.startswith("_") for p in rel.split(os.sep)):
-                continue
-            n += sum(1 for f in files if f.endswith(".parquet"))
-        return n
+        return len(_data_files(self._resolve(name, version, None).path))
 
     def maintain(
         self,
@@ -2064,7 +2097,6 @@ class SnapshotCatalog:
             version,
             snap_dir,
             operation,
-            row_count=prev.row_count,
             delete_path=delete_path,
             delete_key_cols=_fix(prev.delete_key_cols) if delete_path else None,
             mixed_schema=prev.mixed_schema,
@@ -2146,7 +2178,7 @@ class SnapshotCatalog:
             # layer rows shadow base rows, so footers over-count unless
             # every upserted key is new — take the counting read
             return self.read(name, version).count()
-        return _footer_row_count(snap.path)
+        return _footer_meta(snap.path)[0]
 
     def register_views(self, prefix: str = "") -> None:
         """Expose every catalog table to Engine.sql (S8/S9 surface)."""

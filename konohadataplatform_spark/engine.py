@@ -75,8 +75,12 @@ class Engine:
         version this engine's session has not seen — so a table
         CREATEd or MERGEd through ANY session over the same warehouse
         (a wire-door SessionEngine clone, another Engine) is queryable
-        here at its latest committed version. Metadata-only: one
-        pointer-file read per table per statement. r12: hoisted from
+        here at its latest committed version. Per table per statement it
+        reads the pointer file; a table whose version moved is re-read
+        from its snapshot record's schema (a driver-side file listing
+        and plan analysis, plus a footer read per merge-on-read side
+        dir), so it launches no Spark job unless the snapshot has no
+        recorded schema or mixes schema generations. r12: hoisted from
         SessionEngine so the BASE engine is symmetric with its clones
         (previously a door CTAS was visible to every NEW door session
         but not to Engine.sql on the base engine itself)."""
@@ -378,7 +382,10 @@ class SessionEngine(Engine):
     (re-)registers any catalog table whose committed version it has
     not seen, so a table CREATEd or MERGEd through one session is
     queryable from every other at its latest committed version. The
-    sync is metadata-only (one pointer-file read per table). Known
+    sync reads each table's pointer file and re-reads a moved table from
+    its recorded schema, with no Spark job (see
+    :meth:`Engine._sync_catalog_views`); replaying the star-schema
+    registration uses the declared schemas, also with no job. Known
     shadowing caveat: a session temp view named like a catalog table
     shadows it only until the table commits a new version.
     """

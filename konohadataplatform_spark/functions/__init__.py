@@ -37,8 +37,3 @@ def dec(col: Column | str, scale: int = 2, precision: int = 18) -> Column:
 def dsum(col: Column | str, scale: int = 2) -> Column:
     """Exact decimal SUM, surfaced as DOUBLE (same bits in any engine)."""
     return F.sum(dec(col, scale)).cast("double")
-
-
-def davg(col: Column | str, scale: int = 2) -> Column:
-    """Order-independent mean: exact decimal sum / count, in DOUBLE."""
-    return F.sum(dec(col, scale)).cast("double") / F.count(F.lit(1))

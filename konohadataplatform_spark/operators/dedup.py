@@ -188,22 +188,6 @@ def ngram_decontaminate(
 # --------------------------------------------------------------------------
 # shingling
 # --------------------------------------------------------------------------
-def shingle_sets(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", n: int = 3
-) -> DataFrame:
-    """(id, shingles) with distinct word n-gram shingles."""
-    toks = F.split(F.trim(F.col(text_col)), " ")
-    sh = F.expr(
-        f"array_distinct(transform(sequence(0, size(w) - {n}), i -> "
-        f"concat_ws(' ', {', '.join(f'w[i + {j}]' for j in range(n))})))"
-    )
-    return (
-        df.select(F.col(id_col).alias("sid"), toks.alias("w"))
-        .filter(F.size("w") >= n)
-        .select("sid", sh.alias("shingles"))
-    )
-
-
 def hashed_shingle_sets(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id", n: int = 3
 ) -> DataFrame:

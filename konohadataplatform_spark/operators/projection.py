@@ -64,23 +64,6 @@ def jl_sign_matrix(
     ]
 
 
-def _signed_sum(row: list[int], arr: str = "_s") -> str:
-    """The +-1 dot product UNROLLED: `element_at(_s,1) - element_at(
-    _s,2) + ...` — plain column arithmetic whole-stage codegen
-    compiles to straight-line adds. (The first spelling — a 2-d
-    literal array indexed inside an aggregate lambda — re-built the
-    1024-literal array per element evaluation: 10.2x sf1 smoke vs
-    this one's ~linear compute.) r15: no longer on jl_project's hot
-    path (the projection is an Arrow kernel now — the out_dim x
-    in_dim unrolled tree cost 2+ s/pass of driver/codegen overhead);
-    kept as the reference spelling for the kernel's equivalence test."""
-    parts = []
-    for i, v in enumerate(row, start=1):
-        op = "+" if v == 1 else "-"
-        parts.append(f"{op} element_at({arr}, {i})")
-    return "(0L " + " ".join(parts) + ")"
-
-
 def jl_project(
     emb: DataFrame,
     out_dim: int = 16,
@@ -441,9 +424,10 @@ def pca_project(
         f"embedding, got ', cast(size({vec_col}) as string))))"
     )
     # each component dot is UNROLLED into straight-line left-assoc
-    # column arithmetic (like _signed_sum): indexing an inlined
-    # k x in_dim literal inside an aggregate lambda would re-build the
-    # literal per element evaluation (~10x interpreted-HOF overhead).
+    # column arithmetic (as jl_project was before its Arrow kernel):
+    # indexing an inlined k x in_dim literal inside an aggregate lambda
+    # would re-build the literal per element evaluation (~10x
+    # interpreted-HOF overhead).
     # The op sequence (0.0 + c1*s1) + c2*s2 + ... is identical to the
     # old sequential fold, so floats are reproducible run-to-run.
     dots = ", ".join(
@@ -527,8 +511,8 @@ def jl_rerank_topk(
     # the norm is computed ONCE per row in a preceding projection —
     # referencing the aggregate inside the transform lambda would
     # re-evaluate the full in_dim-term fold per ELEMENT (O(d^2)
-    # interpreted work per row, the exact hazard _signed_sum's notes
-    # document). x / sqrt(nrm2) is the same IEEE op sequence either
+    # interpreted work per row, the same hazard as the inlined literal
+    # above). x / sqrt(nrm2) is the same IEEE op sequence either
     # way, so oracle floats are unchanged. The temp name is uniquified
     # so a caller column is never silently clobbered + dropped.
     nrm2 = "_nrm2"

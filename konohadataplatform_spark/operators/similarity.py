@@ -6,7 +6,7 @@
   Python), then a per-query window top-k. At 100 TB the corpus is never
   shuffled — only the broadcast queries move — and the top-k window
   shuffles just (query_id, corpus_id, score) triples.
-- ``hyperplane_signatures`` / ``ann_lsh_topk`` — random-hyperplane LSH:
+- ``table_signatures_arrow`` / ``ann_lsh_topk`` — random-hyperplane LSH:
   sign-bit signatures bucket the corpus; queries only score their own
   bucket (plus multiprobe neighbors), cutting scored pairs by ~2^bits.
   Approximate recall — benchmarked against brute force in tests.
@@ -157,32 +157,6 @@ def cosine_topk(
 def make_planes(dim: int, bits: int = 12, seed: int = 42) -> list[list[float]]:
     rng = np.random.RandomState(seed)
     return rng.standard_normal((bits, dim)).tolist()
-
-
-def hyperplane_signature(vec: Column, planes: list[list[float]]) -> Column:
-    """Pack sign bits of plane dot-products into a long bucket id."""
-    sig = F.lit(0).cast("long")
-    for i, p in enumerate(planes):
-        plane = F.array(*[F.lit(float(x)) for x in p])
-        sig = sig.bitwiseOR(
-            F.when(_dot(vec, plane) >= 0, F.shiftleft(F.lit(1).cast("long"), i)).otherwise(
-                F.lit(0).cast("long")
-            )
-        )
-    return sig
-
-
-def _table_signatures(
-    vec: Column, planes: list[list[float]], n_tables: int, bits_per_table: int
-) -> Column:
-    """Array of per-table bucket ids (table index folded into the id so
-    buckets from different tables never collide)."""
-    sigs = []
-    for t in range(n_tables):
-        sub = planes[t * bits_per_table : (t + 1) * bits_per_table]
-        sig = hyperplane_signature(vec, sub)
-        sigs.append(sig + F.lit(t).cast("long") * F.lit(1 << bits_per_table).cast("long"))
-    return F.array(*sigs)
 
 
 def ann_lsh_topk(

@@ -207,18 +207,6 @@ def word_entropy(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") 
     )
 
 
-def with_text_features(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Attach the full feature bundle to a documents DataFrame."""
-    t = F.col(text_col)
-    return (
-        df.withColumn("token_cnt", token_count(t))
-        .withColumn("distinct_token_cnt", distinct_token_count(t))
-        .withColumn("stopword_r", stopword_ratio(t))
-        .withColumn("pred_lang", predict_lang(t))
-        .withColumn("doc_fp", fingerprint(t))
-    )
-
-
 def boilerplate_coverage(
     df: DataFrame, n: int = 5, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:

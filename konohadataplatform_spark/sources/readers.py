@@ -101,13 +101,6 @@ def read_avro(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
-def read_json(spark: SparkSession, path: str, schema=None) -> DataFrame:
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.json(path)
-
-
 def read_jdbc(
     spark: SparkSession,
     url: str,

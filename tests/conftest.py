@@ -1,12 +1,16 @@
 from __future__ import annotations
 
+import contextlib
 import math
 import os
+import time
+import uuid
 from datetime import date, datetime
 from decimal import Decimal
 
 import duckdb
 import pytest
+from pyspark.sql.readwriter import DataFrameReader
 
 from konohadataplatform_spark.session import get_spark
 from konohadataplatform_spark.sources.star_schema import TABLES
@@ -25,8 +29,9 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 #
 # Full suite (closing gates): pytest -m "slowtier or not slowtier".
 # Keys are `<file>::<name>` nodeids relative to this directory;
-# a key that stops matching (renamed/removed test) is harmless — the
-# test simply runs in the default tier again.
+# test_slowtier_keys.py fails when a key stops matching (a renamed or
+# removed test), which would otherwise put the test silently back in
+# the default tier.
 # ---------------------------------------------------------------------------
 SLOWTIER = {
     "test_ingest.py::test_ingest_decontamination_gate",
@@ -94,6 +99,43 @@ def spark():
         shuffle_partitions=32,
     )
     yield s
+
+
+@contextlib.contextmanager
+def parquet_read_jobs(spark, monkeypatch):
+    """Count the Spark jobs launched inside ``DataFrameReader.parquet``:
+    each call runs under a fresh job group. Yields a callable returning
+    the count so far."""
+    sc = spark.sparkContext
+    status = sc.statusTracker()
+    groups: list[str] = []
+    orig = DataFrameReader.parquet
+
+    def parquet(self, *paths, **options):
+        group = f"parquet-read-{uuid.uuid4().hex}"
+        groups.append(group)
+        sc.setJobGroup(group, group)
+        try:
+            return orig(self, *paths, **options)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+
+    def count() -> int:
+        # the status store fills from the listener bus asynchronously
+        # and in order: once a sentinel job started after the reads is
+        # visible, every earlier job start is too
+        sentinel = f"sentinel-{uuid.uuid4().hex}"
+        sc.setJobGroup(sentinel, sentinel)
+        sc._jsc.parallelize(sc._jvm.java.util.Collections.singletonList(0), 1).count()
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        deadline = time.monotonic() + 30
+        while not status.getJobIdsForGroup(sentinel):
+            assert time.monotonic() < deadline, "status tracker never saw the sentinel"
+            time.sleep(0.02)
+        return sum(len(status.getJobIdsForGroup(g)) for g in groups)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", parquet)
+    yield count
 
 
 @pytest.fixture(scope="session")

@@ -43,14 +43,28 @@ def test_jl_project_matches_numpy_replay(spark):
         assert got[vid] == expect, vid
 
 
+def _signed_sum(row: list[int], arr: str = "_s") -> str:
+    """The +-1 dot product UNROLLED: `element_at(_s,1) - element_at(
+    _s,2) + ...` — plain column arithmetic whole-stage codegen
+    compiles to straight-line adds (a first spelling, a 2-d literal
+    array indexed inside an aggregate lambda, re-built the 1024-literal
+    array per element evaluation: 10.2x slower). This was jl_project's
+    spelling before the projection became an Arrow kernel (the out_dim
+    x in_dim unrolled tree cost 2+ s/pass of driver/codegen overhead);
+    it stays here as the reference for the kernel's equivalence test."""
+    parts = []
+    for i, v in enumerate(row, start=1):
+        op = "+" if v == 1 else "-"
+        parts.append(f"{op} element_at({arr}, {i})")
+    return "(0L " + " ".join(parts) + ")"
+
+
 def test_jl_project_kernel_matches_unrolled_expr(spark):
     """The r15 Arrow kernel must be bit-identical to the original
     plan-time unrolled ``element_at`` spelling (the pre-r15 physical
     form, rebuilt here from ``_signed_sum``) — int64 sums are
     order-independent, so the numpy matmul and the left-assoc column
     fold must agree exactly on real fixture vectors."""
-    from konohadataplatform_spark.operators.projection import _signed_sum
-
     emb = _emb(spark).limit(50)
     m = jl_sign_matrix(16, 64)
     snapped = (
