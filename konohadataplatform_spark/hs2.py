@@ -32,7 +32,7 @@ protocol spec — hand-rolled, no thrift compiler or runtime dep):
   collect runs on a daemon thread under a per-operation Spark job
   group; GetOperationStatus reports RUNNING→FINISHED/ERROR/CANCELED
   and CancelOperation interrupts mid-flight via
-  ``sparkContext.cancelJobGroup``
+  ``SparkContext.cancelJobGroupAndFutureJobs``
 - GetOperationStatus (real per-handle state + error detail + a
   TProgressUpdateResp stub when the client asks for in-place
   progress) / CancelOperation / CloseOperation
@@ -47,21 +47,26 @@ protocol spec — hand-rolled, no thrift compiler or runtime dep):
 Not implemented: Kerberos/LDAP auth, HTTP transport, result
 compression, log fetching (fetchType=1 returns an empty rowset).
 
-Scale posture: identical to pgwire/sqlserver — every statement's
-result is capped with a limit+1 probe (no unbounded driver collect);
-fetch paging serves from the capped buffer; concurrent connections are
-threads sharing the one SparkSession.
+Session isolation, the result cap and the per-statement job group are
+the shared wire core's (``wiredoor.py``); fetch paging serves from the
+capped buffer.
 """
 
 from __future__ import annotations
 
 import socket
-import socketserver
 import struct
 import threading
 import uuid
 
-DEFAULT_LIMIT = 10_000
+from konohadataplatform_spark.wiredoor import (
+    DEFAULT_LIMIT,
+    WireServer,
+    check_limit,
+    fetch_capped,
+    session_engine,
+)
+
 DEFAULT_PORT = 10009  # the reference's Kyuubi frontend port
 
 # TOperationState (TCLIService.thrift)
@@ -451,7 +456,7 @@ def _row_set(dtypes: list[tuple[str, str]], rows: list, start: int) -> tuple[int
 
 # ---- the server ------------------------------------------------------------
 
-class Hs2Server:
+class Hs2Server(WireServer):
     """Threaded HiveServer2-protocol server over an :class:`Engine`.
 
     >>> srv = Hs2Server(engine).start()
@@ -466,17 +471,14 @@ class Hs2Server:
                  credentials: dict[str, str] | None = None):
         from konohadataplatform_spark.wireauth import resolve_credentials
 
-        self.engine = engine
-        self.host, self.port = host, port
-        self.limit = limit
+        super().__init__(engine, host, port)
+        self.limit = check_limit(limit)
         # None = dev posture (accept any PLAIN, allow noSasl); a dict
         # (ctor or KONOHA_WIRE_CREDENTIALS env) turns verification on
         self._credentials = resolve_credentials(credentials)
         self._sessions: dict[bytes, dict] = {}
         self._ops: dict[bytes, dict] = {}
         self._lock = threading.Lock()
-        self._server: socketserver.ThreadingTCPServer | None = None
-        self._thread: threading.Thread | None = None
 
     # -- operation factory --------------------------------------------------
     def _new_op(self, dtypes, rows, session: bytes = b"",
@@ -494,20 +496,18 @@ class Hs2Server:
     def _collect_into(self, guid: bytes, df) -> None:
         """Materialize a statement's (limit-capped) rows into its
         operation slot. Runs inline for sync statements and on a daemon
-        thread for ``runAsync`` ones; either way the Spark jobs carry a
-        per-operation job group so CancelOperation can interrupt them
-        (``cancelJobGroup`` is the one cancellation primitive that
+        thread for ``runAsync`` ones; either way the Spark jobs carry the
+        operation's job group so CancelOperation can interrupt them
+        (cancelling a job group is the one cancellation primitive that
         reaches already-scheduled tasks on a real cluster)."""
         op = self._ops.get(guid)
         if op is None:  # closed before the thread got scheduled
             return
-        sc = self.engine.spark.sparkContext
         try:
-            sc.setJobGroup(guid.hex(), "hs2 statement", interruptOnCancel=True)
-            rows = [tuple(r) for r in df.limit(self.limit + 1).collect()]
+            rows, _truncated = fetch_capped(self.engine, df, self.limit, guid.hex())
             with self._lock:
                 if op["state"] == OP_RUNNING:
-                    op["rows"] = rows[: self.limit]
+                    op["rows"] = [tuple(r) for r in rows]
                     op["state"] = OP_FINISHED
         except Exception as exc:
             with self._lock:
@@ -542,16 +542,7 @@ class Hs2Server:
                 ), 2: (T_I32, self.PROTOCOL_MAX)}
             proto = min(client_proto, self.PROTOCOL_MAX)
             guid = uuid.uuid4().bytes
-            # Kyuubi-style session isolation: a catalog-backed engine
-            # gets its own SparkSession clone (temp views + SQL conf
-            # are per-session; catalog tables stay shared). Without a
-            # catalog there is nothing to mirror base temp views
-            # through, so fall back to the shared engine.
-            seng = self.engine
-            if getattr(self.engine, "catalog", None) is not None:
-                from konohadataplatform_spark.engine import SessionEngine
-
-                seng = SessionEngine(self.engine)
+            seng = session_engine(self.engine)
             with self._lock:
                 self._sessions[guid] = {"protocol": proto, "engine": seng}
             if conn_sessions is not None:
@@ -641,12 +632,12 @@ class Hs2Server:
                     if was_running:
                         op["state"] = OP_CANCELED
                 if was_running:
-                    try:
-                        self.engine.spark.sparkContext.cancelJobGroup(
-                            guid.hex())
-                    except Exception:
-                        pass  # group may have no live jobs yet
                     op["done"].set()  # unblock any fetcher immediately
+                    # a cancel can land while the fetch is still
+                    # planning, before its job exists: the "future jobs"
+                    # form also kills a job submitted after it
+                    sc = self.engine.spark.sparkContext
+                    sc._jsc.sc().cancelJobGroupAndFutureJobs(guid.hex())
             return {1: _status_ok()}
 
         if name == "CloseOperation":
@@ -842,34 +833,6 @@ class Hs2Server:
             # HiveServer2/Kyuubi keep the connection open); only
             # EOF/reset ends the connection, and _serve_conn's finally
             # reaps whatever sessions are still tracked at that point.
-
-    def start(self) -> "Hs2Server":
-        outer = self
-
-        class Handler(socketserver.StreamRequestHandler):
-            def handle(self) -> None:
-                try:
-                    outer._serve_conn(self.rfile, self.wfile)
-                except (BrokenPipeError, ConnectionResetError, EOFError):
-                    pass
-
-        class Server(socketserver.ThreadingTCPServer):
-            allow_reuse_address = True
-            daemon_threads = True
-
-        self._server = Server((self.host, self.port), Handler)
-        self.port = self._server.server_address[1]
-        self._thread = threading.Thread(
-            target=self._server.serve_forever, name="konoha-hs2", daemon=True
-        )
-        self._thread.start()
-        return self
-
-    def stop(self) -> None:
-        if self._server is not None:
-            self._server.shutdown()
-            self._server.server_close()
-            self._server = None
 
 
 # ---------------------------------------------------------------------------

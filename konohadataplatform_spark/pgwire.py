@@ -41,21 +41,25 @@ Implemented (per the published protocol docs):
 Not implemented: COPY, binary parameter/result formats, cursors
 beyond one unnamed portal row-limit, cancellation keys, TLS.
 
-Scale posture: identical to SqlServer — results are capped with a
-limit+1 probe (no second count job, no unbounded driver collect);
-concurrent connections are threads sharing the one SparkSession whose
-jobs the JVM schedules fairly.
+Session isolation (one clone per connection), the result cap and the
+per-statement job group are the shared wire core's (``wiredoor.py``).
 """
 
 from __future__ import annotations
 
 import re
 import socket
-import socketserver
 import struct
 import threading
+import uuid
 
-DEFAULT_LIMIT = 10_000
+from konohadataplatform_spark.wiredoor import (
+    DEFAULT_LIMIT,
+    WireServer,
+    check_limit,
+    fetch_capped,
+    session_engine,
+)
 
 # transaction-control statements a stock client sends around its work:
 # first word -> CommandComplete tag (auto-commit engine, so no-ops)
@@ -440,7 +444,7 @@ class _PgCatalogMirror:
             return dtypes, cur.fetchall()
 
 
-class PgWireServer:
+class PgWireServer(WireServer):
     """Threaded Postgres-protocol server over an :class:`Engine`.
 
     >>> srv = PgWireServer(engine).start()
@@ -454,9 +458,8 @@ class PgWireServer:
                  auth_method: str = "md5"):
         from konohadataplatform_spark.wireauth import resolve_credentials
 
-        self.engine = engine
-        self.host, self.port = host, port
-        self.limit = limit
+        super().__init__(engine, host, port)
+        self.limit = check_limit(limit)
         # None = trust auth (dev posture); a dict (ctor or
         # KONOHA_WIRE_CREDENTIALS env) requires every connection to
         # pass a password exchange: "md5" (salted, what stock clients
@@ -465,19 +468,8 @@ class PgWireServer:
         if auth_method not in ("md5", "cleartext"):
             raise ValueError("auth_method must be 'md5' or 'cleartext'")
         self._auth_method = auth_method
-        self._server: socketserver.ThreadingTCPServer | None = None
-        self._thread: threading.Thread | None = None
         self._pgcat: _PgCatalogMirror | None = None
         self._pgcat_lock = threading.Lock()
-        # per-connection engine (Kyuubi session-isolation analog): each
-        # connection runs in its own handler thread, so a thread-local
-        # carries its SessionEngine — temp views and SET conf are
-        # connection-scoped, catalog tables shared (engine.SessionEngine)
-        self._conn = threading.local()
-
-    @property
-    def _conn_engine(self):
-        return getattr(self._conn, "engine", None) or self.engine
 
     def _catalog_mirror(self) -> _PgCatalogMirror:
         with self._pgcat_lock:
@@ -491,7 +483,7 @@ class PgWireServer:
         return _TXN_TAGS.get(head[0].upper()) if head else None
 
     # -- query execution ----------------------------------------------------
-    def _run_query(self, wfile, sql: str) -> None:
+    def _run_query(self, wfile, sql: str, engine) -> None:
         stmts = _split_statements(sql)
         if not stmts:
             wfile.write(_Messages.empty_query())
@@ -508,12 +500,11 @@ class PgWireServer:
                     wfile.write(_Messages.data_row(list(r)))
                 wfile.write(_Messages.command_complete(f"SELECT {len(rows)}"))
                 continue
-            df = self._conn_engine.sql(stmt)
+            df = engine.sql(stmt)
             if df is None or not df.columns:
                 wfile.write(_Messages.command_complete("OK"))
                 continue
-            rows = df.limit(self.limit + 1).collect()
-            rows = rows[: self.limit]
+            rows, _ = fetch_capped(self.engine, df, self.limit, uuid.uuid4().hex)
             wfile.write(_Messages.row_description(list(df.dtypes)))
             for r in rows:
                 wfile.write(_Messages.data_row(list(r)))
@@ -545,8 +536,9 @@ class PgWireServer:
         )
 
     def _handle_extended(self, tag, payload, wfile, state) -> None:
-        """One extended-protocol message. ``state`` carries prepared
-        statements, portals, and the error-until-Sync flag."""
+        """One extended-protocol message. ``state`` carries the
+        connection's engine, prepared statements, portals, and the
+        error-until-Sync flag."""
         if state.get("error") and tag not in (b"S",):
             return  # spec: after an error, discard until Sync
         if tag == b"P":  # Parse: name\0 sql\0 nparamtypes oids...
@@ -597,7 +589,7 @@ class PgWireServer:
                 wfile.write(_Messages.row_description(dtypes))
             elif (sql is not None and self._returns_rows(sql)
                     and self._txn_tag(sql) is None and not has_params):
-                df = self._conn_engine.sql(sql)  # lazy: schema only, no action
+                df = state["engine"].sql(sql)  # lazy: schema only, no action
                 wfile.write(_Messages.row_description(list(df.dtypes)))
             else:
                 # unbound parameters or no result set: client re-describes
@@ -618,13 +610,13 @@ class PgWireServer:
                     _dt, rows = self._catalog_mirror().run(entry["sql"])
                     entry["rows"] = [tuple(r) for r in rows]
                 else:
-                    df = self._conn_engine.sql(entry["sql"])
+                    df = state["engine"].sql(entry["sql"])
                     if df is None or not df.columns:
                         entry["rows"] = []
                         wfile.write(_Messages.command_complete("OK"))
                         return
-                    entry["rows"] = (
-                        df.limit(self.limit + 1).collect()[: self.limit]
+                    entry["rows"], _ = fetch_capped(
+                        self.engine, df, self.limit, uuid.uuid4().hex
                     )
             rows = entry["rows"]
             take = rows[entry["pos"] : entry["pos"] + maxrows] if maxrows else rows[entry["pos"] :]
@@ -683,7 +675,7 @@ class PgWireServer:
             wfile.flush()
         return ok
 
-    def _handle_conn(self, rfile, wfile) -> None:
+    def _serve_conn(self, rfile, wfile) -> None:
         # startup phase: length-prefixed, untagged messages
         while True:
             head = rfile.read(4)
@@ -707,15 +699,9 @@ class PgWireServer:
             rfile, wfile, payload
         ):
             return
-        # session isolation (Kyuubi analog): catalog-backed engines get
-        # a per-connection SparkSession clone — CREATE TEMP VIEW and
-        # SET in this connection never leak into another
-        if getattr(self.engine, "catalog", None) is not None:
-            from konohadataplatform_spark.engine import SessionEngine
-
-            self._conn.engine = SessionEngine(self.engine)
-        else:
-            self._conn.engine = None
+        # one session per connection: CREATE TEMP VIEW and SET in this
+        # connection never leak into another
+        engine = session_engine(self.engine)
         wfile.write(_Messages.auth_ok())
         for k, v in (
             ("server_version", "15.0 (konohadataplatform-spark)"),
@@ -729,7 +715,7 @@ class PgWireServer:
         wfile.write(_Messages.ready())
         wfile.flush()
 
-        state = {"stmts": {}, "portals": {}, "error": False}
+        state = {"engine": engine, "stmts": {}, "portals": {}, "error": False}
         while True:
             tag = rfile.read(1)
             if not tag:
@@ -744,7 +730,7 @@ class PgWireServer:
             if tag == b"Q":
                 sql = payload.rstrip(b"\x00").decode("utf-8")
                 try:
-                    self._run_query(wfile, sql)
+                    self._run_query(wfile, sql, engine)
                 except Exception as exc:  # noqa: BLE001 — wire boundary
                     wfile.write(_Messages.error(str(exc)))
                 wfile.write(_Messages.ready())
@@ -767,35 +753,6 @@ class PgWireServer:
                 wfile.write(_Messages.ready())
                 wfile.flush()
 
-    # -- lifecycle ----------------------------------------------------------
-    def start(self) -> "PgWireServer":
-        outer = self
-
-        class Handler(socketserver.StreamRequestHandler):
-            def handle(self) -> None:
-                try:
-                    outer._handle_conn(self.rfile, self.wfile)
-                except (BrokenPipeError, ConnectionResetError):
-                    pass
-
-        class Server(socketserver.ThreadingTCPServer):
-            allow_reuse_address = True
-            daemon_threads = True
-
-        self._server = Server((self.host, self.port), Handler)
-        self.port = self._server.server_address[1]
-        self._thread = threading.Thread(
-            target=self._server.serve_forever, name="konoha-pgwire", daemon=True
-        )
-        self._thread.start()
-        return self
-
-    def stop(self) -> None:
-        if self._server is not None:
-            self._server.shutdown()
-            self._server.server_close()
-            self._server = None
-
 
 # ---------------------------------------------------------------------------
 # Minimal frontend (tests + CLI): speaks the same simple-query subset.
@@ -815,40 +772,46 @@ def pg_query(port: int, sql: str, host: str = "127.0.0.1", timeout: float = 60.0
         q = sql.encode("utf-8") + b"\x00"
         f.write(b"Q" + struct.pack(">I", len(q) + 4) + q)
         f.flush()
-        cols, rows, err = [], [], None
-        while True:
-            tag = f.read(1)
-            (length,) = struct.unpack(">I", f.read(4))
-            payload = f.read(length - 4)
-            if tag == b"T":
-                (n,) = struct.unpack(">H", payload[:2])
-                pos = 2
-                cols = []
-                for _ in range(n):
-                    end = payload.index(b"\x00", pos)
-                    cols.append(payload[pos:end].decode())
-                    pos = end + 1 + 18
-            elif tag == b"D":
-                (n,) = struct.unpack(">H", payload[:2])
-                pos = 2
-                row = []
-                for _ in range(n):
-                    (ln,) = struct.unpack(">i", payload[pos : pos + 4])
-                    pos += 4
-                    if ln == -1:
-                        row.append(None)
-                    else:
-                        row.append(payload[pos : pos + ln].decode())
-                        pos += ln
-                rows.append(row)
-            elif tag == b"E":
-                fields = payload.split(b"\x00")
-                err = next(
-                    (x[1:].decode() for x in fields if x[:1] == b"M"), "error"
-                )
-            elif tag == b"Z":
-                return cols, rows, err
-        # unreachable
+        return _read_result(f)
+
+
+def _read_result(f) -> tuple[list, list, str | None]:
+    """Read one query's reply up to ReadyForQuery: (columns,
+    rows-as-text, error-or-None)."""
+    cols, rows, err = [], [], None
+    while True:
+        tag = f.read(1)
+        (length,) = struct.unpack(">I", f.read(4))
+        payload = f.read(length - 4)
+        if tag == b"T":
+            (n,) = struct.unpack(">H", payload[:2])
+            pos = 2
+            cols = []
+            for _ in range(n):
+                end = payload.index(b"\x00", pos)
+                cols.append(payload[pos:end].decode())
+                pos = end + 1 + 18
+        elif tag == b"D":
+            (n,) = struct.unpack(">H", payload[:2])
+            pos = 2
+            row = []
+            for _ in range(n):
+                (ln,) = struct.unpack(">i", payload[pos : pos + 4])
+                pos += 4
+                if ln == -1:
+                    row.append(None)
+                else:
+                    row.append(payload[pos : pos + ln].decode())
+                    pos += ln
+            rows.append(row)
+        elif tag == b"E":
+            fields = payload.split(b"\x00")
+            err = next(
+                (x[1:].decode() for x in fields if x[:1] == b"M"), "error"
+            )
+        elif tag == b"Z":
+            return cols, rows, err
+
 
 def _drain_until_ready(f) -> None:
     while True:
@@ -899,37 +862,4 @@ def pg_extended_query(
         send(b"E", b"\x00" + struct.pack(">I", 0))
         send(b"S", b"")
         f.flush()
-
-        cols, rows, err = [], [], None
-        while True:
-            tag = f.read(1)
-            (length,) = struct.unpack(">I", f.read(4))
-            payload = f.read(length - 4)
-            if tag == b"T":
-                (n,) = struct.unpack(">H", payload[:2])
-                pos = 2
-                cols = []
-                for _ in range(n):
-                    end = payload.index(b"\x00", pos)
-                    cols.append(payload[pos:end].decode())
-                    pos = end + 1 + 18
-            elif tag == b"D":
-                (n,) = struct.unpack(">H", payload[:2])
-                pos = 2
-                row = []
-                for _ in range(n):
-                    (ln,) = struct.unpack(">i", payload[pos : pos + 4])
-                    pos += 4
-                    if ln == -1:
-                        row.append(None)
-                    else:
-                        row.append(payload[pos : pos + ln].decode())
-                        pos += ln
-                rows.append(row)
-            elif tag == b"E":
-                fields = payload.split(b"\x00")
-                err = next(
-                    (x[1:].decode() for x in fields if x[:1] == b"M"), "error"
-                )
-            elif tag == b"Z":
-                return cols, rows, err
+        return _read_result(f)

@@ -34,19 +34,14 @@ Two surfaces on one stdlib ``ThreadingHTTPServer``:
        DELETE /api/v1/sessions/{id}
 
    Statements execute eagerly; the operation store keeps the shaped
-   result until the session is closed. Since r11 each REST session
-   carries its own :class:`~konohadataplatform_spark.engine.
-   SessionEngine` (``spark.newSession()`` clone — private temp views
-   and SQL conf, shared catalog tables), the same Kyuubi-style
-   isolation the HS2/pgwire doors ship; the sessionless ``/sql``
-   shortcut stays on the shared engine (it has no session to scope
-   state to).
+   result until the session is closed. Each REST session is one
+   isolated session; the sessionless ``/sql`` shortcut stays on the
+   shared engine (it has no session to scope state to).
 
-Result sets are capped like every other wire front-end (fetch-size
-guard, limit+1 truncation probe — a full-table SELECT over 100 TB
-returns the first N rows and ``truncated: true``, never the world).
-Concurrency is the driver's: each HTTP request runs on its own thread
-and Spark schedules the JVM work.
+Session isolation, the result cap (``limit``; ``truncated: true`` past
+it, 400 for a negative one) and the per-statement job group are the
+shared wire core's (``wiredoor.py``). Each HTTP request runs on its
+own thread.
 """
 
 from __future__ import annotations
@@ -57,7 +52,8 @@ import uuid
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlparse
 
-from konohadataplatform_spark.sqlserver import DEFAULT_LIMIT, execute_sql_json
+from konohadataplatform_spark.sqlserver import error_doc, execute_sql_json
+from konohadataplatform_spark.wiredoor import DEFAULT_LIMIT, WireServer, session_engine
 
 # Oldest operation docs are evicted past this per-session cap so a
 # client that never DELETEs its session cannot grow driver memory
@@ -65,7 +61,7 @@ from konohadataplatform_spark.sqlserver import DEFAULT_LIMIT, execute_sql_json
 MAX_OPS_PER_SESSION = 64
 
 
-class RestSqlServer:
+class RestSqlServer(WireServer):
     """Threaded HTTP SQL server over an :class:`Engine`.
 
     >>> srv = RestSqlServer(engine).start()      # port auto-assigned
@@ -74,33 +70,16 @@ class RestSqlServer:
     >>> srv.stop()
     """
 
+    server_class = ThreadingHTTPServer
+
     def __init__(self, engine, host: str = "127.0.0.1", port: int = 0):
-        self.engine = engine
-        self.host, self.port = host, port
-        self._server: ThreadingHTTPServer | None = None
-        self._thread: threading.Thread | None = None
+        super().__init__(engine, host, port)
         self._lock = threading.Lock()
         # sid -> {"ops": [op ids], "engine": per-session engine}
         self._sessions: dict[str, dict] = {}
         self._operations: dict[str, dict] = {}  # op id -> result doc
 
     # -- request handling ---------------------------------------------------
-    def _session_engine(self):
-        """Kyuubi-style per-session isolation: a SessionEngine clone
-        when the engine is catalog-backed, else the shared engine
-        (nothing to mirror base temp views through)."""
-        if getattr(self.engine, "catalog", None) is not None:
-            from konohadataplatform_spark.engine import SessionEngine
-
-            return SessionEngine(self.engine)
-        return self.engine
-
-    def _run(self, sql: str, limit: int, engine=None) -> tuple[int, dict]:
-        doc = execute_sql_json(
-            self.engine if engine is None else engine, sql, limit
-        )
-        return (200 if doc["ok"] else 400), doc
-
     def _dispatch(self, method: str, path: str, query: dict, body: dict
                   ) -> tuple[int, object]:
         if method == "GET" and path == "/api/v1/ping":
@@ -119,14 +98,15 @@ class RestSqlServer:
             if not sql:
                 return 400, {"ok": False, "error": "missing sql",
                              "error_class": "KeyError"}
-            return self._run(sql, limit)
+            doc = execute_sql_json(self.engine, sql, limit)
+            return (200 if doc["ok"] else 400), doc
 
         parts = [p for p in path.split("/") if p]
         # /api/v1/sessions[...]
         if parts[:3] == ["api", "v1", "sessions"]:
             if method == "POST" and len(parts) == 3:
                 sid = str(uuid.uuid4())
-                seng = self._session_engine()
+                seng = session_engine(self.engine)
                 with self._lock:
                     self._sessions[sid] = {"ops": [], "engine": seng}
                 return 200, {"identifier": sid}
@@ -150,7 +130,7 @@ class RestSqlServer:
                     limit = int(body.get("limit", DEFAULT_LIMIT))
                     with self._lock:
                         seng = self._sessions[sid]["engine"]
-                    _status, doc = self._run(sql, limit, engine=seng)
+                    doc = execute_sql_json(seng, sql, limit)
                     op = str(uuid.uuid4())
                     with self._lock:
                         ops = self._sessions[sid]["ops"]
@@ -179,8 +159,8 @@ class RestSqlServer:
                 return 200, doc
         return 404, {"ok": False, "error": f"no route: {method} {path}"}
 
-    # -- lifecycle ----------------------------------------------------------
-    def start(self) -> "RestSqlServer":
+    # -- transport ----------------------------------------------------------
+    def _handler(self) -> type:
         outer = self
 
         class Handler(BaseHTTPRequestHandler):
@@ -208,11 +188,7 @@ class RestSqlServer:
                         method, u.path, parse_qs(u.query), body
                     )
                 except Exception as exc:  # noqa: BLE001 — wire boundary
-                    status, payload = 400, {
-                        "ok": False,
-                        "error": str(exc)[:4000],
-                        "error_class": type(exc).__name__,
-                    }
+                    status, payload = 400, error_doc(exc)
                 self._respond(status, payload)
 
             def do_GET(self):
@@ -224,22 +200,7 @@ class RestSqlServer:
             def do_DELETE(self):
                 self._handle("DELETE")
 
-        self._server = ThreadingHTTPServer((self.host, self.port), Handler)
-        self._server.daemon_threads = True
-        self.port = self._server.server_address[1]
-        self._thread = threading.Thread(
-            target=self._server.serve_forever,
-            name="konoha-rest-server",
-            daemon=True,
-        )
-        self._thread.start()
-        return self
-
-    def stop(self) -> None:
-        if self._server is not None:
-            self._server.shutdown()
-            self._server.server_close()
-            self._server = None
+        return Handler
 
 
 def rest_request(

@@ -19,23 +19,11 @@ Protocol (one JSON object per line, UTF-8):
                "truncated": false, "elapsed_ms": M}
     error:    {"ok": false, "error": "...", "error_class": "ValueError"}
 
-Session isolation (r11, mirroring the HS2/pgwire doors): each TCP
-CONNECTION gets its own :class:`~konohadataplatform_spark.engine.
-SessionEngine` (a ``spark.newSession()`` clone — private temp views
-and SQL conf over the shared SparkContext) when the engine is
-catalog-backed; catalog tables stay globally visible at their latest
-committed version, exactly the Kyuubi shared-metastore pairing. A
-catalog-less engine falls back to the single shared session (there is
-nothing to mirror base temp views through). Concurrency is the
-driver's: each connection runs on its own thread and Spark schedules
-the jobs; the GIL only gates the (tiny) JSON serialization, not the
-JVM query execution.
-
-Result sets are capped by ``limit`` (default 10_000, like a JDBC
-fetch-size guard): a full-table SELECT over 100 TB returns the first N
-rows and ``truncated: true`` instead of collecting the world onto the
-driver. Values are JSON-ified conservatively (Decimal/date/datetime/
-bytes -> strings) so any client can parse them.
+Each TCP CONNECTION is one session, and a request's ``limit`` caps its
+rows (``truncated: true`` past it; a negative one is refused): session
+isolation, the cap and the per-statement job group are the shared wire
+core's (``wiredoor.py``). Values are JSON-ified conservatively
+(Decimal/date/datetime/bytes -> strings) so any client can parse them.
 """
 
 from __future__ import annotations
@@ -45,11 +33,17 @@ import datetime
 import decimal
 import json
 import socket
-import socketserver
 import threading
 import time
+import uuid
 
-DEFAULT_LIMIT = 10_000
+from konohadataplatform_spark.wiredoor import (
+    DEFAULT_LIMIT,
+    WireServer,
+    check_limit,
+    fetch_capped,
+    session_engine,
+)
 
 
 def _jsonable(v):
@@ -70,18 +64,22 @@ def _jsonable(v):
     return str(v)
 
 
+def error_doc(exc: Exception) -> dict:
+    """The wire-JSON error document of the line-JSON and REST doors."""
+    return {"ok": False, "error": str(exc)[:4000], "error_class": type(exc).__name__}
+
+
 def execute_sql_json(engine, sql: str, limit: int = DEFAULT_LIMIT) -> dict:
     """Run one statement and shape the result as the wire-JSON dict
     shared by the line-JSON TCP server and the REST endpoint
     (``restserver.py``): columns/types/rows/row_count/truncated or
-    ok=false + error. Result sets are capped at ``limit`` rows with a
-    limit+1 probe (no second count() job)."""
+    ok=false + error. Result sets are capped at ``limit`` rows
+    (:func:`~konohadataplatform_spark.wiredoor.fetch_capped`)."""
     t0 = time.perf_counter()
     try:
+        check_limit(limit)
         df = engine.sql(sql)
-        rows = df.limit(limit + 1).collect()
-        truncated = len(rows) > limit
-        rows = rows[:limit]
+        rows, truncated = fetch_capped(engine, df, limit, uuid.uuid4().hex)
         return {
             "ok": True,
             "columns": list(df.columns),
@@ -92,14 +90,10 @@ def execute_sql_json(engine, sql: str, limit: int = DEFAULT_LIMIT) -> dict:
             "elapsed_ms": round((time.perf_counter() - t0) * 1000, 1),
         }
     except Exception as exc:  # noqa: BLE001 — wire boundary
-        return {
-            "ok": False,
-            "error": str(exc)[:4000],
-            "error_class": type(exc).__name__,
-        }
+        return error_doc(exc)
 
 
-class SqlServer:
+class SqlServer(WireServer):
     """Threaded line-JSON SQL server over an :class:`Engine`.
 
     >>> srv = SqlServer(engine).start()        # port auto-assigned
@@ -108,71 +102,23 @@ class SqlServer:
     >>> srv.stop()
     """
 
-    def __init__(self, engine, host: str = "127.0.0.1", port: int = 0):
-        self.engine = engine
-        self.host, self.port = host, port
-        self._server: socketserver.ThreadingTCPServer | None = None
-        self._thread: threading.Thread | None = None
-
-    def _session_engine(self):
-        """Per-connection engine: a SessionEngine clone when catalog-
-        backed (temp views + SET are connection-scoped, catalog tables
-        shared — the same isolation the HS2/pgwire doors ship), else
-        the shared engine."""
-        if getattr(self.engine, "catalog", None) is not None:
-            from konohadataplatform_spark.engine import SessionEngine
-
-            return SessionEngine(self.engine)
-        return self.engine
-
-    def _handle_line(self, line: str, engine=None) -> str:
+    def _handle_line(self, line: str, engine) -> str:
         try:
             req = json.loads(line)
             sql = req["sql"]
             limit = int(req.get("limit", DEFAULT_LIMIT))
         except Exception as exc:  # noqa: BLE001 — wire boundary
-            return json.dumps({
-                "ok": False,
-                "error": str(exc)[:4000],
-                "error_class": type(exc).__name__,
-            })
-        return json.dumps(
-            execute_sql_json(
-                self.engine if engine is None else engine, sql, limit
-            )
-        )
+            return json.dumps(error_doc(exc))
+        return json.dumps(execute_sql_json(engine, sql, limit))
 
-    def start(self) -> "SqlServer":
-        outer = self
-
-        class Handler(socketserver.StreamRequestHandler):
-            def handle(self) -> None:
-                eng = outer._session_engine()
-                for raw in self.rfile:
-                    line = raw.decode("utf-8").strip()
-                    if not line:
-                        continue
-                    out = outer._handle_line(line, eng)
-                    self.wfile.write(out.encode("utf-8") + b"\n")
-                    self.wfile.flush()
-
-        class Server(socketserver.ThreadingTCPServer):
-            allow_reuse_address = True
-            daemon_threads = True
-
-        self._server = Server((self.host, self.port), Handler)
-        self.port = self._server.server_address[1]
-        self._thread = threading.Thread(
-            target=self._server.serve_forever, name="konoha-sql-server", daemon=True
-        )
-        self._thread.start()
-        return self
-
-    def stop(self) -> None:
-        if self._server is not None:
-            self._server.shutdown()
-            self._server.server_close()
-            self._server = None
+    def _serve_conn(self, rfile, wfile) -> None:
+        engine = session_engine(self.engine)
+        for raw in rfile:
+            line = raw.decode("utf-8").strip()
+            if not line:
+                continue
+            wfile.write(self._handle_line(line, engine).encode("utf-8") + b"\n")
+            wfile.flush()
 
 
 def sql_request(

@@ -101,6 +101,34 @@ def spark():
     yield s
 
 
+def settle_status(sc) -> None:
+    """Wait until ``statusTracker()`` has seen every job started so far:
+    the status store fills from the listener bus asynchronously and in
+    order, so once a sentinel job started now is visible, every earlier
+    job start is too."""
+    sentinel = f"sentinel-{uuid.uuid4().hex}"
+    sc.setJobGroup(sentinel, sentinel)
+    sc._jsc.parallelize(sc._jvm.java.util.Collections.singletonList(0), 1).count()
+    sc.setLocalProperty("spark.jobGroup.id", None)
+    deadline = time.monotonic() + 30
+    while not sc.statusTracker().getJobIdsForGroup(sentinel):
+        assert time.monotonic() < deadline, "status tracker never saw the sentinel"
+        time.sleep(0.02)
+
+
+@pytest.fixture()
+def group_jobs(spark):
+    """Callable: the sorted job ids of a job group, read once every job
+    started so far is visible."""
+    sc = spark.sparkContext
+
+    def jobs(group: str) -> list[int]:
+        settle_status(sc)
+        return sorted(sc.statusTracker().getJobIdsForGroup(group))
+
+    return jobs
+
+
 @contextlib.contextmanager
 def parquet_read_jobs(spark, monkeypatch):
     """Count the Spark jobs launched inside ``DataFrameReader.parquet``:
@@ -121,17 +149,7 @@ def parquet_read_jobs(spark, monkeypatch):
             sc.setLocalProperty("spark.jobGroup.id", None)
 
     def count() -> int:
-        # the status store fills from the listener bus asynchronously
-        # and in order: once a sentinel job started after the reads is
-        # visible, every earlier job start is too
-        sentinel = f"sentinel-{uuid.uuid4().hex}"
-        sc.setJobGroup(sentinel, sentinel)
-        sc._jsc.parallelize(sc._jvm.java.util.Collections.singletonList(0), 1).count()
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        deadline = time.monotonic() + 30
-        while not status.getJobIdsForGroup(sentinel):
-            assert time.monotonic() < deadline, "status tracker never saw the sentinel"
-            time.sleep(0.02)
+        settle_status(sc)
         return sum(len(status.getJobIdsForGroup(g)) for g in groups)
 
     monkeypatch.setattr(DataFrameReader, "parquet", parquet)
