@@ -13,9 +13,10 @@ metadata layer, mirroring Iceberg's commit protocol:
   on the new current — true multi-writer optimistic concurrency, not
   just the reference's Airflow-serialized single writer
   (``max_active_runs=1``, ``dag/dbt_analytics_pipeline.py:54``);
-- read-modify-write operations (append/merge/delete/compact/...) pin
-  their basis version through the commit, so a df derived from a stale
-  snapshot can never publish over a newer one;
+- read-modify-write operations (append/merge/delete/compact/...) go
+  through ``SnapshotCatalog.rewrite``, which pins their basis version
+  through the commit, so a df derived from a stale snapshot can never
+  publish over a newer one;
 - readers resolve the pointer then roll forward over fully-claimed
   successors, so concurrent reads always see a complete snapshot and a
   claimer that dies mid-publish cannot wedge or regress the table.
@@ -557,19 +558,35 @@ class SnapshotCatalog:
         """S5 full write (CTAS-overwrite) / append; auto-creates (M7).
         ``operation`` overrides the history label (SQL DML dispatch
         records e.g. ``merge(sql)`` instead of ``overwrite``)."""
-        if mode == "append":
-            base = self.current_snapshot(name)
-            if base is not None:
-                existing = self._read_snapshot(base)
-                df = existing.unionByName(df, allowMissingColumns=True)
-                return self._commit(
-                    name,
-                    df,
-                    operation or "append",
-                    partition_by,
-                    expected_version=base.version + 1,
-                )
+        if mode == "append" and self.exists(name):
+            return self.rewrite(
+                name,
+                lambda existing: existing.unionByName(df, allowMissingColumns=True),
+                operation or "append",
+                partition_by,
+            )
         return self._commit(name, df, operation or "overwrite", partition_by)
+
+    def rewrite(
+        self,
+        name: str,
+        fn,
+        operation: str,
+        partition_by: list[str] | None = None,
+    ) -> Snapshot:
+        """The one read-modify-write commit: ``fn(basis_df)`` is
+        committed pinned to the version after the basis snapshot read
+        here, so a writer that commits in between makes this raise
+        CommitConflictError instead of being overwritten (retry with
+        :func:`commit_with_retry`). Every row-level rewrite of one table
+        goes through here. ValueError if the table does not exist."""
+        basis = self.current_snapshot(name)
+        if basis is None:
+            raise ValueError(f"table not found: {name}")
+        df = fn(self._read_snapshot(basis))
+        return self._commit(
+            name, df, operation, partition_by, expected_version=basis.version + 1
+        )
 
     def merge(
         self,
@@ -577,20 +594,27 @@ class SnapshotCatalog:
         source: DataFrame,
         key_cols: list[str],
         partition_by: list[str] | None = None,
+        delete_keys: DataFrame | None = None,
     ) -> Snapshot:
         """S6 incremental MERGE (upsert-by-key): pure-Spark fallback for
         Iceberg's MERGE INTO — anti-join the target, union the source,
         commit a new snapshot. Schema evolution (M5): new source columns
         are added, missing ones null-filled (unionByName allowMissing).
+        ``delete_keys`` (holding ``key_cols``) removes rows without
+        re-inserting them: the shadowed keys are the source keys plus
+        the delete keys.
         """
-        base = self.current_snapshot(name)
-        if base is None:
+        if not self.exists(name):
             return self._commit(name, source, "create-on-merge", partition_by)
-        target = self._read_snapshot(base)
-        kept = target.join(source.select(*key_cols).distinct(), key_cols, "left_anti")
-        merged = kept.unionByName(source, allowMissingColumns=True)
-        return self._commit(
-            name, merged, "merge", partition_by, expected_version=base.version + 1
+        keys = source.select(*key_cols)
+        if delete_keys is not None:
+            keys = keys.unionByName(delete_keys.select(*key_cols))
+        return self.rewrite(
+            name,
+            lambda target: target.join(keys.distinct(), key_cols, "left_anti")
+            .unionByName(source, allowMissingColumns=True),
+            "merge",
+            partition_by,
         )
 
     def merge_partitioned(
@@ -615,13 +639,7 @@ class SnapshotCatalog:
         import urllib.parse
 
         if not self.exists(name):
-            snap = self._commit(name, source, "create-on-merge", [partition_col])
-            return snap
-
-        changed = source.select(*key_cols, partition_col)
-        if delete_keys is not None:
-            changed = changed.unionByName(delete_keys.select(*key_cols, partition_col))
-        vals = [r[0] for r in changed.select(partition_col).distinct().collect()]
+            return self._commit(name, source, "create-on-merge", [partition_col])
 
         prev = self.current_snapshot(name)
         if prev.delete_path or prev.upsert_layers or prev.renames or prev.dropped:
@@ -631,23 +649,19 @@ class SnapshotCatalog:
             # deleted rows / drop layered upserts / mix physical
             # schemas across partition dirs. Materialize first (one
             # full rewrite), then merge scoped.
-            self._commit(name, self.read(name), "materialize-mor", [partition_col])
-            prev = self.current_snapshot(name)
+            prev = self.rewrite(name, lambda df: df, "materialize-mor", [partition_col])
         part_prefix = f"{partition_col}="
         prev_part_dirs = [
             e for e in os.listdir(prev.path) if e.startswith(part_prefix)
         ]
         if not prev_part_dirs:
             # target isn't partitioned on this column — full merge
-            merged = (
-                self._read_snapshot(prev)
-                .join(changed.select(*key_cols).distinct(), key_cols, "left_anti")
-                .unionByName(source, allowMissingColumns=True)
-            )
-            return self._commit(
-                name, merged, "merge", None, expected_version=prev.version + 1
-            )
+            return self.merge(name, source, key_cols, delete_keys=delete_keys)
 
+        changed = source.select(*key_cols, partition_col)
+        if delete_keys is not None:
+            changed = changed.unionByName(delete_keys.select(*key_cols, partition_col))
+        vals = [r[0] for r in changed.select(partition_col).distinct().collect()]
         target = self._read_snapshot(prev)
         # isin() with a None in the list is NULL for every row (SQL
         # three-valued logic), which would silently drop *all* base rows
@@ -1368,17 +1382,8 @@ class SnapshotCatalog:
 
     def delete_where(self, name: str, predicate: str) -> Snapshot:
         """M4 DELETE FROM name WHERE predicate (filtered rewrite)."""
-        base = self.current_snapshot(name)
-        if base is None:
-            raise ValueError(f"table not found: {name}")
-        df = self._read_snapshot(base).filter(f"NOT ({predicate})")
-        return self._commit(
-            name,
-            df,
-            f"delete-where: {predicate}",
-            None,
-            expected_version=base.version + 1,
-        )
+        op = f"delete-where: {predicate}"
+        return self.rewrite(name, lambda df: df.filter(f"NOT ({predicate})"), op)
 
     # ---- read paths -----------------------------------------------------
     def read(
@@ -1396,8 +1401,7 @@ class SnapshotCatalog:
         return self._read_snapshot(snap)
 
     def _read_snapshot(self, snap: Snapshot) -> DataFrame:
-        """Build the DataFrame for a specific snapshot — the basis the
-        read-modify-write commit paths pin their expected_version to."""
+        """Build the DataFrame for a specific snapshot."""
         return self._apply_mor(self._read_base(snap), snap)
 
     def _parquet(
@@ -1959,55 +1963,55 @@ class SnapshotCatalog:
                 target_files = max(1, -(-total // target_file_bytes))
             else:
                 target_files = 8
-        cur = self._read_snapshot(base)
+        spec = f",sort={sort_by}" if sort_by else ""
         if zorder_by:
-            # Z-ORDER (the OPTIMIZE ZORDER BY analog): range-partition
-            # and sort on the interleaved-bit address so EVERY zorder
-            # column gets tight per-file min/max — multi-column scan
-            # pruning where a lexicographic sort only helps its leading
-            # column. One tiny agg job fetches global min/max for the
-            # linear normalization (numeric columns only).
-            mm = cur.agg(
-                *[F.min(c).alias(f"_lo_{c}") for c in zorder_by],
-                *[F.max(c).alias(f"_hi_{c}") for c in zorder_by],
-            ).collect()[0]
-            mins = {c: mm[f"_lo_{c}"] for c in zorder_by}
-            maxs = {c: mm[f"_hi_{c}"] for c in zorder_by}
-            z = self._zvalue(zorder_by, mins, maxs)
-            df = (
-                cur.withColumn("_zaddr", z)
-                .repartitionByRange(target_files, F.col("_zaddr"))
-                .sortWithinPartitions("_zaddr")
-                .drop("_zaddr")
-            )
-            op = f"compact({target_files},zorder={zorder_by})"
-            return self._commit(
-                name, df, op, partition_by, expected_version=base.version + 1
-            )
-        if partition_by:
-            # hash on the partition columns so each partition value's
-            # rows coalesce into one task -> one file per partition,
-            # instead of every task touching every partition
-            df = cur.repartition(target_files, *[F.col(c) for c in partition_by])
-        elif sort_by:
-            # RANGE-partition on the sort key so each output file owns
-            # a disjoint key range (round-robin + local sort would give
-            # every file the full keyspace and useless min/max stats)
-            df = cur.repartitionByRange(
-                target_files, *[F.col(c) for c in sort_by]
-            )
-        else:
-            df = cur.repartition(target_files)
-        if sort_by:
-            # cluster within each output file so parquet row-group
-            # min/max stats become selective — scans filtering on the
-            # sort key skip whole row groups (the Z-order-lite that
-            # matters most at 100 TB: sort on the dominant filter col)
-            df = df.sortWithinPartitions(*sort_by)
-        op = f"compact({target_files}" + (f",sort={sort_by}" if sort_by else "") + ")"
-        return self._commit(
-            name, df, op, partition_by, expected_version=base.version + 1
-        )
+            spec = f",zorder={zorder_by}"
+
+        def _layout(cur: DataFrame) -> DataFrame:
+            if zorder_by:
+                # Z-ORDER (the OPTIMIZE ZORDER BY analog): range-partition
+                # and sort on the interleaved-bit address so EVERY zorder
+                # column gets tight per-file min/max — multi-column scan
+                # pruning where a lexicographic sort only helps its leading
+                # column. One tiny agg job fetches global min/max for the
+                # linear normalization (numeric columns only).
+                mm = cur.agg(
+                    *[F.min(c).alias(f"_lo_{c}") for c in zorder_by],
+                    *[F.max(c).alias(f"_hi_{c}") for c in zorder_by],
+                ).collect()[0]
+                mins = {c: mm[f"_lo_{c}"] for c in zorder_by}
+                maxs = {c: mm[f"_hi_{c}"] for c in zorder_by}
+                z = self._zvalue(zorder_by, mins, maxs)
+                return (
+                    cur.withColumn("_zaddr", z)
+                    .repartitionByRange(target_files, F.col("_zaddr"))
+                    .sortWithinPartitions("_zaddr")
+                    .drop("_zaddr")
+                )
+            if partition_by:
+                # hash on the partition columns so each partition value's
+                # rows coalesce into one task -> one file per partition,
+                # instead of every task touching every partition
+                df = cur.repartition(target_files, *[F.col(c) for c in partition_by])
+            elif sort_by:
+                # RANGE-partition on the sort key so each output file owns
+                # a disjoint key range (round-robin + local sort would give
+                # every file the full keyspace and useless min/max stats)
+                df = cur.repartitionByRange(
+                    target_files, *[F.col(c) for c in sort_by]
+                )
+            else:
+                df = cur.repartition(target_files)
+            if sort_by:
+                # cluster within each output file so parquet row-group
+                # min/max stats become selective — scans filtering on the
+                # sort key skip whole row groups (the Z-order-lite that
+                # matters most at 100 TB: sort on the dominant filter col)
+                df = df.sortWithinPartitions(*sort_by)
+            return df
+
+        op = f"compact({target_files}{spec})"
+        return self.rewrite(name, _layout, op, partition_by)
 
     def file_count(self, name: str, version: int | None = None) -> int:
         """Number of base data files in the snapshot (metadata only)."""
@@ -2044,17 +2048,8 @@ class SnapshotCatalog:
 
     def add_column(self, name: str, col_name: str, col_expr) -> Snapshot:
         """M5 ALTER TABLE ADD COLUMN (materialized as a new snapshot)."""
-        base = self.current_snapshot(name)
-        if base is None:
-            raise ValueError(f"table not found: {name}")
-        df = self._read_snapshot(base).withColumn(col_name, col_expr)
-        return self._commit(
-            name,
-            df,
-            f"add-column({col_name})",
-            None,
-            expected_version=base.version + 1,
-        )
+        op = f"add-column({col_name})"
+        return self.rewrite(name, lambda df: df.withColumn(col_name, col_expr), op)
 
     def _physical_name(self, snap: Snapshot, current: str) -> str:
         """Resolve a current column name to its on-disk parquet name."""
@@ -2190,9 +2185,11 @@ def commit_with_retry(op, retries: int = 3):
     """Optimistic-concurrency retry loop (the Iceberg commit contract's
     client half): ``op()`` performs a catalog commit built against the
     CURRENT snapshot; on CommitConflictError it is re-invoked, so it
-    re-reads the new current state and re-applies. Use for cheap
-    commits (merge-on-read upserts/deletes, small merges) where
-    recomputing against the fresh base is inexpensive.
+    re-reads the new current state and re-applies. It covers every
+    :meth:`SnapshotCatalog.rewrite` caller (append, merge, delete_where,
+    add_column, compact, CDC copy-on-write apply, SCD-2 snapshot, SQL
+    UPDATE/MERGE) as well as the merge-on-read upserts/deletes. Use it
+    where recomputing against the fresh base is inexpensive.
     """
     last = None
     for _ in range(retries + 1):

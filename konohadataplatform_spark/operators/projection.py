@@ -78,10 +78,12 @@ def jl_project(
 
     ``in_dim`` is part of the matrix definition, so a vector of any
     other length is a contract violation — loud error, never a silent
-    truncation. Overflow bound: |proj[j]| <= in_dim * grid * max|v|
-    must stay under 2^63 (defaults allow |v| up to ~1.4e11 for the
-    projection ALONE — downstream squared distances bind far tighter,
-    see :func:`jl_neighbors`). One narrow projection, no exchange.
+    truncation; so are a NULL or non-numeric id (NULL after the bigint
+    cast) and a NaN, inf or NULL vector element. Overflow bound:
+    |proj[j]| <= in_dim * grid * max|v| must stay under 2^63 (defaults
+    allow |v| up to ~1.4e11 for the projection ALONE — downstream
+    squared distances bind far tighter, see :func:`jl_neighbors`).
+    One narrow projection, no exchange.
 
     r15: the projection runs as a per-task Arrow kernel (numpy int64
     matmul against the sign matrix — the embedding_covariance Gram
@@ -119,9 +121,19 @@ def jl_project(
                 raise ValueError(
                     f"jl_project: expected {d_in}-d embedding, got {bad}"
                 )
+            if ids.null_count:
+                raise ValueError(
+                    f"jl_project: NULL or non-numeric id in {id_col!r}"
+                )
             v = col.flatten().to_numpy(zero_copy_only=False).reshape(
                 -1, d_in
             )
+            if not np.isfinite(v).all():
+                # NULL elements arrive as NaN; floor(NaN/inf).astype
+                # would be an arbitrary int64, not an error
+                raise ValueError(
+                    f"jl_project: NaN, inf or NULL element in {vec_col!r}"
+                )
             # same IEEE op order as the SQL spelling: x * grid in
             # double, floor, then int64 — exact parity per component
             s = np.floor(v * g).astype(np.int64)

@@ -240,55 +240,57 @@ class PipelineOps:
         if not cat.exists(name):
             return cat.write(name, src)
 
-        hist = cat.read(name)
-        cur = hist.filter(_F.col("_is_current"))
-        closed = hist.filter(~_F.col("_is_current"))
+        data_cols = [c for c in source.columns if c not in (unique_key, updated_at)]
 
-        data_cols = [
-            c for c in source.columns if c not in (unique_key, updated_at)
-        ]
-        joined = cur.alias("c").join(
-            source.alias("s"), _F.col(f"c.{unique_key}") == _F.col(f"s.{unique_key}"), "full"
-        )
-        changed_pred = _F.lit(False)
-        for c in data_cols:
-            changed_pred = changed_pred | ~_F.col(f"c.{c}").eqNullSafe(_F.col(f"s.{c}"))
-
-        # rows to close: current rows whose source version changed
-        # (pull the source's updated_at across before dropping s.*)
-        to_close = (
-            joined.filter(
-                _F.col(f"s.{unique_key}").isNotNull()
-                & _F.col(f"c.{unique_key}").isNotNull()
-                & changed_pred
+        def _scd2(hist):
+            cur = hist.filter(_F.col("_is_current"))
+            closed = hist.filter(~_F.col("_is_current"))
+            joined = cur.alias("c").join(
+                source.alias("s"),
+                _F.col(f"c.{unique_key}") == _F.col(f"s.{unique_key}"),
+                "full",
             )
-            .select(_F.col(f"s.{updated_at}").alias("_close_ts"), "c.*")
-            .withColumn("_valid_to", _F.col("_close_ts"))
-            .drop("_close_ts")
-            .withColumn("_is_current", _F.lit(False))
-        )
+            changed_pred = _F.lit(False)
+            for c in data_cols:
+                same = _F.col(f"c.{c}").eqNullSafe(_F.col(f"s.{c}"))
+                changed_pred = changed_pred | ~same
 
-        # unchanged current rows stay open
-        unchanged = joined.filter(
-            _F.col(f"c.{unique_key}").isNotNull()
-            & (_F.col(f"s.{unique_key}").isNull() | ~changed_pred)
-        ).select("c.*")
-
-        # new versions (changed or brand-new keys) become open rows
-        new_rows = (
-            joined.filter(
-                _F.col(f"s.{unique_key}").isNotNull()
-                & (_F.col(f"c.{unique_key}").isNull() | changed_pred)
+            # rows to close: current rows whose source version changed
+            # (pull the source's updated_at across before dropping s.*)
+            to_close = (
+                joined.filter(
+                    _F.col(f"s.{unique_key}").isNotNull()
+                    & _F.col(f"c.{unique_key}").isNotNull()
+                    & changed_pred
+                )
+                .select(_F.col(f"s.{updated_at}").alias("_close_ts"), "c.*")
+                .withColumn("_valid_to", _F.col("_close_ts"))
+                .drop("_close_ts")
+                .withColumn("_is_current", _F.lit(False))
             )
-            .select("s.*")
-            .withColumn("_valid_from", _F.col(updated_at))
-            .withColumn("_valid_to", _F.lit(None).cast("timestamp"))
-            .withColumn("_is_current", _F.lit(True))
-        )
 
-        merged = (
-            closed.unionByName(to_close)
-            .unionByName(unchanged)
-            .unionByName(new_rows)
-        )
-        return cat._commit(name, merged, "snapshot", None)
+            # unchanged current rows stay open
+            unchanged = joined.filter(
+                _F.col(f"c.{unique_key}").isNotNull()
+                & (_F.col(f"s.{unique_key}").isNull() | ~changed_pred)
+            ).select("c.*")
+
+            # new versions (changed or brand-new keys) become open rows
+            new_rows = (
+                joined.filter(
+                    _F.col(f"s.{unique_key}").isNotNull()
+                    & (_F.col(f"c.{unique_key}").isNull() | changed_pred)
+                )
+                .select("s.*")
+                .withColumn("_valid_from", _F.col(updated_at))
+                .withColumn("_valid_to", _F.lit(None).cast("timestamp"))
+                .withColumn("_is_current", _F.lit(True))
+            )
+
+            return (
+                closed.unionByName(to_close)
+                .unionByName(unchanged)
+                .unionByName(new_rows)
+            )
+
+        return cat.rewrite(name, _scd2, "snapshot")

@@ -199,23 +199,22 @@ def _dispatch_update(engine, query: str) -> DataFrame:
             raise ValueError(f"bad SET assignment: {part!r}")
         assigns[_unalias(part[:eq])] = part[eq + 1 :].strip()
 
-    cat = engine.catalog
-    df = cat.read(name)
-    unknown = set(assigns) - set(df.columns)
-    if unknown:
-        raise ValueError(f"UPDATE {name}: unknown column(s) {sorted(unknown)}")
     view = name.split(".")[-1]
-    df.createOrReplaceTempView(view)
-    select_list = [
-        f"CASE WHEN ({pred}) THEN ({assigns[c]}) ELSE {_qid(c)} END AS {_qid(c)}"
-        if c in assigns
-        else _qid(c)
-        for c in df.columns
-    ]
-    updated = engine.spark.sql(
-        f"SELECT {', '.join(select_list)} FROM {view}"
-    )
-    snap = cat.write(name, updated, operation=f"update-where: {pred}")
+
+    def _updated(df: DataFrame) -> DataFrame:
+        unknown = set(assigns) - set(df.columns)
+        if unknown:
+            raise ValueError(f"UPDATE {name}: unknown column(s) {sorted(unknown)}")
+        df.createOrReplaceTempView(view)
+        select_list = [
+            f"CASE WHEN ({pred}) THEN ({assigns[c]}) ELSE {_qid(c)} END AS {_qid(c)}"
+            if c in assigns
+            else _qid(c)
+            for c in df.columns
+        ]
+        return engine.spark.sql(f"SELECT {', '.join(select_list)} FROM {view}")
+
+    snap = engine.catalog.rewrite(name, _updated, f"update-where: {pred}")
     return _refresh_and_summarize(engine, name, snap)
 
 
@@ -584,10 +583,18 @@ def _insert_select(action: str, tcols, scols, s: str) -> str:
 
 def _dispatch_merge(engine, query: str) -> DataFrame:
     p = _parse_merge(query)
-    cat, spark = engine.catalog, engine.spark
     target = p["target"]
-    t = p["talias"] or target.split(".")[-1]
-    target_df = cat.read(target)
+    snap = engine.catalog.rewrite(
+        target, lambda target_df: _merge_rows(engine, p, target_df), "merge(sql)"
+    )
+    return _refresh_and_summarize(engine, target, snap)
+
+
+def _merge_rows(engine, p: dict, target_df: DataFrame) -> DataFrame:
+    """The table after the parsed MERGE ``p``, built over ``target_df``
+    (the basis snapshot the commit is pinned to)."""
+    spark = engine.spark
+    t = p["talias"] or p["target"].split(".")[-1]
     # synthetic row id for the cardinality check below; tcols is taken from
     # target_df so __merge_tid never reaches the output
     target_df.withColumn(
@@ -691,8 +698,7 @@ def _dispatch_merge(engine, query: str) -> DataFrame:
     for piece in pieces:
         df = spark.sql(piece)
         final = df if final is None else final.unionByName(df)
-    snap = cat.write(target, final, operation="merge(sql)")
-    return _refresh_and_summarize(engine, target, snap)
+    return final
 
 
 # --------------------------------------------------------------------------

@@ -224,20 +224,24 @@ def apply_cdc_batch(
     idempotence gate skipped it (callers must not record side effects
     — e.g. replay high-water marks — for skipped batches).
 
-    latest-wins dedupe -> split deletes/upserts -> single merge commit.
-    Auto-creates the table from the stream schema on first batch (M7,
-    `auto-create-enabled` analog).
+    latest-wins dedupe -> split deletes/upserts -> commit. The first
+    batch creates the table with one write of its upserts (M7,
+    `auto-create-enabled` analog); after the dedupe no upsert shares a
+    key with a delete, so there is nothing else to apply.
 
-    With ``partition_col`` set (the C6 pattern: target partitioned by a
-    stable key-derived column), the commit is partition-scoped — only
-    partitions containing changed keys are rewritten; the rest of the
-    table is carried forward by reference.
-
-    With ``merge_on_read=True`` the commit writes ONLY the batch rows:
-    upserts land as an equality-shadowed layer file, deletes as delete
-    keys (catalog.upsert_by_keys / delete_by_keys). Commit cost is
-    O(|batch|) regardless of table size — the 100 TB streaming path;
-    schedule catalog.compact() to bound read amplification.
+    Copy-on-write (the default) is ONE commit: ``catalog.merge`` with
+    the deletes as ``delete_keys``, or with ``partition_col`` set (the
+    C6 pattern) ``catalog.merge_partitioned``, which rewrites only the
+    partitions holding changed keys and carries the rest forward by
+    reference. ``merge_on_read=True`` writes ONLY the batch rows:
+    upserts as an equality-shadowed layer, deletes as delete keys
+    (catalog.upsert_by_keys / delete_by_keys), still two commits.
+    Commit cost is O(|batch|) regardless of table size — the 100 TB
+    streaming path; schedule catalog.compact() to bound read
+    amplification. Every commit that reads the table pins its basis: a
+    writer that commits to the table mid-apply makes it raise
+    CommitConflictError rather than lose that writer's rows (retry
+    with ``commit_with_retry``).
 
     ``batch_id`` (Structured Streaming's epoch id) makes the apply
     transactionally idempotent: a batch at or below the recorded
@@ -267,8 +271,6 @@ def apply_cdc_batch(
                 upserts,
                 partition_by=[partition_col] if partition_col else None,
             )
-            if deletes.take(1):
-                _apply_deletes(catalog, table, deletes.select(*key_cols), key_cols)
         elif merge_on_read:
             # order matters: upsert first (it also clears pending
             # deletes for re-inserted keys), then delete this batch's
@@ -288,24 +290,14 @@ def apply_cdc_batch(
                 delete_keys=deletes.select(*key_cols, partition_col),
             )
         else:
-            target = catalog.read(table)
-            touched = deduped.select(*key_cols).distinct()
-            kept = target.join(touched, key_cols, "left_anti")
-            merged = kept.unionByName(upserts, allowMissingColumns=True)
-            catalog._commit(table, merged, "cdc-apply", None)
+            catalog.merge(
+                table, upserts, key_cols, delete_keys=deletes.select(*key_cols)
+            )
         if batch_id is not None:
             _mark_applied_batch(catalog, table, batch_id)
         return True
     finally:
         deduped.unpersist()
-
-
-def _apply_deletes(
-    catalog: SnapshotCatalog, table: str, deletes: DataFrame, key_cols: list[str]
-) -> None:
-    target = catalog.read(table)
-    remaining = target.join(deletes, key_cols, "left_anti")
-    catalog._commit(table, remaining, "cdc-delete", None)
 
 
 class CdcPipeline:

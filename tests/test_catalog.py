@@ -316,6 +316,116 @@ def test_concurrent_commit_conflict_detected(spark, catalog, tmp_path):
     assert [r.id for r in catalog.read("t").collect()] == [2]
 
 
+def _tiny(spark, rows, schema="id long, v string"):
+    return spark.createDataFrame(rows, schema)
+
+
+def _seed_plain(spark, cat):
+    cat.write("t", _tiny(spark, [(1, "a"), (2, "b")]))
+
+
+def _scd2(spark, cat, rows):
+    from konohadataplatform_spark.plans.pipeline import Pipeline, PipelineOps
+
+    src = _tiny(spark, rows, "id long, v string, ts long").withColumn(
+        "ts", F.col("ts").cast("timestamp")
+    )
+    return PipelineOps(Pipeline(spark, cat)).snapshot("t", src, "id", "ts")
+
+
+def _cdc_apply(spark, cat):
+    from konohadataplatform_spark.streaming.cdc import apply_cdc_batch
+
+    changes = _tiny(
+        spark,
+        [(1, "u", "u", 1, 1), (2, None, "d", 2, 2)],
+        "id long, v string, op string, ts_ms long, lsn long",
+    )
+    apply_cdc_batch(cat, "t", changes, ["id"])
+
+
+def _sql(query):
+    def run(spark, cat):
+        from konohadataplatform_spark.engine import Engine
+
+        _tiny(spark, [(1, "m"), (3, "n")]).createOrReplaceTempView("race_src")
+        Engine(spark, cat).sql(query)
+
+    return run
+
+
+# every read-modify-write path: (set-up, the rewrite under test)
+RACED_REWRITES = {
+    "merge": (
+        _seed_plain,
+        lambda spark, cat: cat.merge("t", _tiny(spark, [(1, "m")]), ["id"]),
+    ),
+    "merge_partitioned_unpartitioned_target": (
+        _seed_plain,
+        lambda spark, cat: cat.merge_partitioned(
+            "t", _tiny(spark, [(1, "m", 0)], "id long, v string, p int"), ["id"], "p"
+        ),
+    ),
+    "delete_where": (_seed_plain, lambda spark, cat: cat.delete_where("t", "id = 1")),
+    "add_column": (
+        _seed_plain,
+        lambda spark, cat: cat.add_column("t", "w", F.lit(1)),
+    ),
+    "compact": (_seed_plain, lambda spark, cat: cat.compact("t", target_files=1)),
+    "write_append": (
+        _seed_plain,
+        lambda spark, cat: cat.write("t", _tiny(spark, [(3, "c")]), mode="append"),
+    ),
+    "cdc_copy_on_write": (_seed_plain, _cdc_apply),
+    "pipeline_snapshot": (
+        lambda spark, cat: _scd2(spark, cat, [(1, "a", 1), (2, "b", 1)]),
+        lambda spark, cat: _scd2(spark, cat, [(1, "a2", 2)]),
+    ),
+    "sql_update": (_seed_plain, _sql("UPDATE t SET v = 'u' WHERE id = 1")),
+    "sql_merge": (
+        _seed_plain,
+        _sql(
+            "MERGE INTO t USING race_src s ON t.id = s.id "
+            "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *"
+        ),
+    ),
+}
+
+
+@pytest.mark.parametrize("path", list(RACED_REWRITES))
+def test_rewrite_conflicts_with_commit_after_its_basis_read(
+    spark, catalog, monkeypatch, path
+):
+    """A writer that commits between a rewrite's basis read and its
+    commit makes the rewrite raise CommitConflictError: the concurrent
+    row survives and the losing commit leaves no snapshot dir."""
+    from konohadataplatform_spark.catalog import CommitConflictError, SnapshotCatalog
+
+    set_up, rewrite = RACED_REWRITES[path]
+    set_up(spark, catalog)
+    other = SnapshotCatalog(spark, catalog.warehouse)
+    allocate = catalog._new_snapshot_dir
+    raced = []
+
+    def allocate_after_a_concurrent_append(name, version=None):
+        if not raced:
+            raced.append(name)
+            other.write("t", _tiny(spark, [(100, "other")]), mode="append")
+        return allocate(name, version)
+
+    monkeypatch.setattr(
+        catalog, "_new_snapshot_dir", allocate_after_a_concurrent_append
+    )
+    with pytest.raises(CommitConflictError):
+        rewrite(spark, catalog)
+    assert raced == ["t"]
+    assert 100 in {r.id for r in catalog.read("t").collect()}
+    on_disk = os.listdir(os.path.join(catalog.warehouse, "t", "snapshots"))
+    assert sorted(on_disk) == sorted(
+        os.path.basename(s.path) for s in catalog.history("t")
+    )
+
+
 def test_concurrent_conflict_leaves_no_orphan_dir(spark, catalog):
     """A losing commit must clean up its snapshot directory — orphan
     data dirs would accumulate under snapshots/ forever."""

@@ -56,6 +56,21 @@ def catalog(spark, tmp_path):
     return SnapshotCatalog(spark, str(tmp_path / "wh"))
 
 
+def test_first_batch_creates_table_in_one_commit(spark, catalog):
+    """A batch that creates its table commits once: after the latest-wins
+    dedupe no upserted key is also a delete key, so there is nothing
+    left to delete."""
+    changes = spark.createDataFrame(
+        [(1, "a", "c", 1, 1), (2, None, "d", 2, 2)],
+        "id long, v string, op string, ts_ms long, lsn long",
+    )
+    assert apply_cdc_batch(catalog, "t", changes, ["id"])
+    assert [(s.version, s.operation) for s in catalog.history("t")] == [
+        (1, "overwrite")
+    ]
+    assert [tuple(r) for r in catalog.read("t").collect()] == [(1, "a")]
+
+
 def test_snapshot_then_changes(spark, catalog):
     """C1/C2: bootstrap snapshot, then insert+update+delete envelopes."""
     pipe = CdcPipeline(

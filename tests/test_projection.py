@@ -142,6 +142,28 @@ def test_jl_project_wrong_dim_raises(spark):
         jl_project(bad).collect()
 
 
+def test_jl_project_null_or_non_numeric_id_raises(spark):
+    """An id that is NULL after the bigint cast (non-numeric text, or
+    NULL) is an error naming the column, not a NULL vec_id row."""
+    for vid in ("x1", None):
+        bad = spark.createDataFrame(
+            [(vid, [0.1] * 64)], "vec_id string, embedding array<double>"
+        )
+        with pytest.raises(Exception, match="non-numeric id in 'vec_id'"):
+            jl_project(bad).collect()
+
+
+def test_jl_project_non_finite_element_raises(spark):
+    """NaN, +-inf and NULL components would floor to an arbitrary int64;
+    they are an error naming the column instead."""
+    for x in (float("nan"), float("inf"), float("-inf"), None):
+        bad = spark.createDataFrame(
+            [(1, [0.1] * 63 + [x])], "vec_id long, embedding array<double>"
+        )
+        with pytest.raises(Exception, match="NULL element in 'embedding'"):
+            jl_project(bad).collect()
+
+
 def test_embedding_covariance_matches_numpy(spark):
     """cov_micro equals the numpy replay of the exact integer formula
     (N*S_ab - S_a*S_b) * 1e6 // (N^2 * grid^2), truncated toward
