@@ -23,10 +23,21 @@ The 100 TB shape — why this layout IS the scalable BPE trainer:
   partial+final groupBy of tokens); everything after runs on the
   VOCAB-sized (word, freq, tokens) relation — millions of rows at web
   scale, not billions of documents;
-- each merge iteration is one partial+final pair-count aggregate plus
-  a metadata-sized top-1 fetch (``F.min_by`` over a 1-row agg would
-  also work; ``limit(1)`` after a global sort of the pair relation is
-  fine because the pair relation is vocab-bounded);
+- the vocabulary relation is cached, then fetched through a counted
+  gate (``gating.collect_within``): ONE ``limit(bound + 1)`` job both
+  decides and fetches. At most ``_DRIVER_VOCAB_ROWS`` rows: the merges
+  are learned in Python on the driver (no job per merge — on a small
+  vocabulary the Spark loop's cost is job-launch latency, not data).
+  Over the bound: the Spark loop below runs from the same cached
+  relation, so the corpus-scale aggregate still runs once. The bound
+  counts ROWS, not bytes: a vocabulary of very long words costs the
+  driver more memory per row (each word is held as a Python token
+  list). Both paths return bit-identical (merges, words), schema
+  included;
+- each Spark-loop merge iteration is one partial+final pair-count
+  aggregate plus a metadata-sized top-1 fetch (``F.min_by`` over a
+  1-row agg would also work; ``limit(1)`` after a global sort of the
+  pair relation is fine because the pair relation is vocab-bounded);
 - the per-word rewrite is a PURE COLUMN EXPRESSION (higher-order
   functions: filter / aggregate-fold / transform) — per-row, JVM-side,
   no shuffle, no UDF, no explode-regroup round trip;
@@ -49,8 +60,10 @@ DuckDB oracle uses (gaps-and-islands), both bit-identical.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
+
+from konohadataplatform_spark.operators.gating import collect_within
 
 
 def word_frequencies(
@@ -124,6 +137,68 @@ def _rewrite_expr() -> F.Column:
     )
 
 
+def _merge_rewrite(words: DataFrame, left: str, right: str) -> DataFrame:
+    """``words`` with the (left, right) merge applied to every `toks`."""
+    return (
+        words.withColumn("_sel", _sel_expr(left, right))
+        .withColumn("toks", _rewrite_expr())
+        .drop("_sel")
+    )
+
+
+# Vocabulary rows up to which bpe_train learns its merges on the driver.
+# A module constant, not a knob. Measured crossover (4-vCPU host,
+# ``local[2]``, 1g driver heap, 4 merges; table in CHANGES.md): the
+# driver loop wins at 10k rows, ties the Spark loop at 50k and loses
+# at 100k. At 16 merges or more the Spark loop runs out of driver heap
+# even at 1k rows, so larger merge counts only widen the driver's lead.
+_DRIVER_VOCAB_ROWS = 50_000
+
+
+def _merge_pair(toks: list[str], left: str, right: str) -> list[str]:
+    """``toks`` with every (left, right) occurrence merged greedily
+    left to right — the ``_sel_expr``/``_rewrite_expr`` rewrite."""
+    out: list[str] = []
+    i, n = 0, len(toks)
+    while i < n:
+        if i + 1 < n and toks[i] == left and toks[i + 1] == right:
+            out.append(left + right)
+            i += 2
+        else:
+            out.append(toks[i])
+            i += 1
+    return out
+
+
+def _train_on_driver(
+    rows: list[Row], n_merges: int
+) -> tuple[list[tuple[int, str, str, int]], list[tuple[str, int, list[str]]]]:
+    """The Spark merge loop of :func:`bpe_train`, replayed in Python
+    over the collected (word, freq, toks) rows: freq-weighted adjacent
+    pair counts as Python ints, the top pair by ``desc(cnt), asc(l),
+    asc(r)`` in Spark's binary (UTF-8 byte) string order, a stop when
+    no pair remains, and the greedy left-to-right rewrite. Returns
+    (merges, final (word, freq, toks) rows)."""
+    state = [(r["word"], r["freq"], list(r["toks"])) for r in rows]
+    merges: list[tuple[int, str, str, int]] = []
+    for rank in range(1, n_merges + 1):
+        counts: dict[tuple[str, str], int] = {}
+        for _, freq, toks in state:
+            for pair in zip(toks, toks[1:]):
+                counts[pair] = counts.get(pair, 0) + freq
+        if not counts:  # vocabulary fully merged
+            break
+        (l, r), cnt = min(
+            counts.items(),
+            key=lambda kv: (
+                -kv[1], kv[0][0].encode("utf-8"), kv[0][1].encode("utf-8")
+            ),
+        )
+        merges.append((rank, l, r, cnt))
+        state = [(w, f, _merge_pair(t, l, r)) for w, f, t in state]
+    return merges, state
+
+
 def bpe_train(
     docs: DataFrame,
     n_merges: int,
@@ -136,6 +211,16 @@ def bpe_train(
     [(merge_rank, left, right, pair_count)] — rank 1 first — and
     ``words`` the final (word, freq, toks) vocabulary state with all
     merges applied (lazy; reuse it to encode or continue training).
+
+    Two paths, one result. When the vocabulary has at most
+    ``_DRIVER_VOCAB_ROWS`` rows (one LIMIT-bounded collect decides and
+    fetches), the merges are learned in Python on the driver and
+    ``words`` is a DataFrame over the driver's rows; over the bound,
+    one Spark pair-count job chain runs per merge and ``words`` is a
+    local checkpoint of the last state. The bound counts rows, not
+    bytes: a vocabulary of unusually long words costs the driver more
+    memory per row than the bound suggests. ``recache_every`` applies
+    to the Spark loop only.
     """
     if n_merges < 1:
         raise ValueError("n_merges must be >= 1")
@@ -143,6 +228,16 @@ def bpe_train(
         "toks", F.split("word", "")
     )
     words = words.cache()
+    rows = collect_within(words, _DRIVER_VOCAB_ROWS)
+    if rows is not None:
+        words.unpersist()
+        merges, state = _train_on_driver(rows, n_merges)
+        # the Spark rewrite makes `toks` elements nullable: take its
+        # schema (analysis only, no job) so both paths' schemas match
+        schema = words.schema
+        if merges:
+            schema = _merge_rewrite(words, merges[0][1], merges[0][2]).schema
+        return merges, words.sparkSession.createDataFrame(state, schema)
     cached = [words]
     merges: list[tuple[int, str, str, int]] = []
     for rank in range(1, n_merges + 1):
@@ -166,11 +261,7 @@ def bpe_train(
             break
         l, r, cnt = top[0]["l"], top[0]["r"], top[0]["cnt"]
         merges.append((rank, l, r, int(cnt)))
-        words = (
-            words.withColumn("_sel", _sel_expr(l, r))
-            .withColumn("toks", _rewrite_expr())
-            .drop("_sel")
-        )
+        words = _merge_rewrite(words, l, r)
         if rank % recache_every == 0:
             words = words.cache()  # lazy: next loop's take() fills it
             cached.append(words)

@@ -21,6 +21,17 @@ Four tiers, all shared-nothing / shuffle-disciplined so they hold at
 
 Everything is built-in column functions (xxhash64, explode, array ops)
 — JVM-side, no Python UDFs anywhere.
+
+Lineage trade-off: ``connected_components`` (every
+``checkpoint_every`` rounds) and the n-gram set of
+``cross_source_overlap`` are ``localCheckpoint``-ed. That truncates a plan
+that would otherwise grow with every round or be tokenized once per
+consumer, but the checkpointed blocks live unreplicated on the
+executors that computed them and have no lineage to recompute from:
+losing one of those executors before the caller is done fails the job
+instead of re-running the rounds. ``cache()`` would recompute, but
+keeps the whole plan (deep enough to overflow the JVM stack when
+rendered after ~10 label rounds) and a CacheManager entry.
 """
 
 from __future__ import annotations

@@ -27,6 +27,15 @@ Scale shapes (the 100 TB contract):
   join cannot skew. Per-query candidate sets are bounded by the docs
   sharing a rare term; for adversarial per-query fan-out compose with
   the salted ranking helpers in ``operators/ranking.py``.
+- The tf relation (and bm25's dl) is a lazy ``localCheckpoint``: it
+  materializes once inside the first consuming job, and its blocks
+  free with the DataFrame. The trade-off is lineage: the blocks live
+  unreplicated on the executors that computed them and cannot be
+  recomputed, so losing one of those executors (a crash, a
+  decommissioned node, dynamic allocation scaling it away) before the
+  query finishes fails the query instead of re-running the
+  tokenization. A ``cache()`` would recompute, at the cost of a fill
+  job and a CacheManager entry that outlives the call.
 """
 
 from __future__ import annotations
