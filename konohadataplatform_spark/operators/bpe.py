@@ -23,47 +23,32 @@ The 100 TB shape — why this layout IS the scalable BPE trainer:
   partial+final groupBy of tokens); everything after runs on the
   VOCAB-sized (word, freq, tokens) relation — millions of rows at web
   scale, not billions of documents;
-- the vocabulary relation is cached, then fetched through a counted
-  gate (``gating.collect_within``): ONE ``limit(bound + 1)`` job both
-  decides and fetches. At most ``_DRIVER_VOCAB_ROWS`` rows: the merges
-  are learned in Python on the driver (no job per merge — on a small
-  vocabulary the Spark loop's cost is job-launch latency, not data).
-  Over the bound: the Spark loop below runs from the same cached
-  relation, so the corpus-scale aggregate still runs once. The bound
-  counts ROWS, not bytes: a vocabulary of very long words costs the
-  driver more memory per row (each word is held as a Python token
-  list). Both paths return bit-identical (merges, words), schema
-  included;
-- each Spark-loop merge iteration is one partial+final pair-count
-  aggregate plus a metadata-sized top-1 fetch (``F.min_by`` over a
-  1-row agg would also work; ``limit(1)`` after a global sort of the
-  pair relation is fine because the pair relation is vocab-bounded);
-- the per-word rewrite is a PURE COLUMN EXPRESSION (higher-order
-  functions: filter / aggregate-fold / transform) — per-row, JVM-side,
-  no shuffle, no UDF, no explode-regroup round trip;
-- the vocab state is RE-MATERIALIZED every ``recache_every`` merges
-  (default 1: each merge caches the rewritten relation and unpersists
-  its parent). This is load-bearing, not a tuning nicety: the rewrite
-  references `toks` many times and the greedy-selection subexpression
-  twice, so Catalyst's project collapsing inlines each layer ~6-9x —
-  chaining k merges as pure expressions grows the generated code
-  exponentially (k=4 already OOMs codegen). One narrow cache job per
-  merge over the vocab-sized relation is exactly what a production
-  trainer does between merge steps.
+- that relation is collected once and the merges are learned in
+  Python on the driver: no Spark job per merge, so a merge costs its
+  pass over the vocabulary, not a job launch. The limit is driver
+  memory, and it counts bytes, not rows: every word is held as a
+  Python token list, so a vocabulary of unusually long words costs
+  more per row. Spark's own guard applies to the fetch: a vocabulary
+  whose serialized rows exceed ``spark.driver.maxResultSize`` fails
+  the collect with an error (the Python token lists then built from
+  the rows take several times their serialized size).
 
-Greedy left-to-right selection as a fold: scan match positions
+Why not a Spark job chain per merge (a pair-count aggregate plus a
+cached greedy rewrite each): timed against the driver loop at 4
+merges, it was slower up to 30k distinct words and faster only from
+about 100k, and at 16 merges or more it ran out of a 1g driver heap
+even on 1k words.
+
+Greedy left-to-right selection: scan the pair's match positions
 ascending, take a match unless it overlaps the previously taken one
-(i == last_taken + 1). Equivalently: within each maximal run of
-consecutive match positions, keep even offsets — the spelling the
-DuckDB oracle uses (gaps-and-islands), both bit-identical.
+(i == last_taken + 1). The DuckDB oracle replays the same rule as a
+list_reduce fold over the match positions, bit-identically.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
-
-from konohadataplatform_spark.operators.gating import collect_within
 
 
 def word_frequencies(
@@ -81,83 +66,9 @@ def word_frequencies(
     )
 
 
-def _pair_counts(words: DataFrame) -> DataFrame:
-    """(l, r, cnt): adjacent token pairs weighted by word freq."""
-    pairs = words.where(F.size("toks") >= 2).select(
-        "freq",
-        F.explode(
-            F.expr(
-                "transform(sequence(0, size(toks) - 2),"
-                " i -> struct(toks[i] AS l, toks[i + 1] AS r))"
-            )
-        ).alias("p"),
-    )
-    return pairs.groupBy("p.l", "p.r").agg(F.sum("freq").alias("cnt"))
-
-
-def _sql_str(s: str) -> str:
-    """Escape a token for embedding as a Spark SQL string literal."""
-    return s.replace("\\", "\\\\").replace("'", "\\'")
-
-
-def _sel_expr(left: str, right: str) -> F.Column:
-    """Greedy left-to-right match positions of the (left, right) pair
-    in `toks`: fold ascending match positions, taking each unless it
-    overlaps the previously taken one."""
-    l, r = _sql_str(left), _sql_str(right)
-    return F.expr(
-        f"""
-        aggregate(
-          filter(if(size(toks) >= 2,
-                    sequence(0, size(toks) - 2),
-                    cast(array() as array<int>)),
-                 i -> toks[i] = '{l}' AND toks[i + 1] = '{r}'),
-          named_struct('s', cast(array() as array<int>), 'last', -2),
-          (acc, i) -> if(i = acc.last + 1,
-                         acc,
-                         named_struct('s', concat(acc.s, array(i)),
-                                      'last', i)),
-          acc -> acc.s)
-        """
-    )
-
-
-def _rewrite_expr() -> F.Column:
-    """New `toks` given greedy match positions in `_sel`: drop the
-    position after each match, merge the pair at each match."""
-    return F.expr(
-        """
-        transform(
-          filter(sequence(0, size(toks) - 1),
-                 j -> NOT array_contains(_sel, j - 1)),
-          j -> if(array_contains(_sel, j),
-                  concat(toks[j], toks[j + 1]),
-                  toks[j]))
-        """
-    )
-
-
-def _merge_rewrite(words: DataFrame, left: str, right: str) -> DataFrame:
-    """``words`` with the (left, right) merge applied to every `toks`."""
-    return (
-        words.withColumn("_sel", _sel_expr(left, right))
-        .withColumn("toks", _rewrite_expr())
-        .drop("_sel")
-    )
-
-
-# Vocabulary rows up to which bpe_train learns its merges on the driver.
-# A module constant, not a knob. Measured crossover (4-vCPU host,
-# ``local[2]``, 1g driver heap, 4 merges; table in CHANGES.md): the
-# driver loop wins at 10k rows, ties the Spark loop at 50k and loses
-# at 100k. At 16 merges or more the Spark loop runs out of driver heap
-# even at 1k rows, so larger merge counts only widen the driver's lead.
-_DRIVER_VOCAB_ROWS = 50_000
-
-
 def _merge_pair(toks: list[str], left: str, right: str) -> list[str]:
     """``toks`` with every (left, right) occurrence merged greedily
-    left to right — the ``_sel_expr``/``_rewrite_expr`` rewrite."""
+    left to right."""
     out: list[str] = []
     i, n = 0, len(toks)
     while i < n:
@@ -173,12 +84,12 @@ def _merge_pair(toks: list[str], left: str, right: str) -> list[str]:
 def _train_on_driver(
     rows: list[Row], n_merges: int
 ) -> tuple[list[tuple[int, str, str, int]], list[tuple[str, int, list[str]]]]:
-    """The Spark merge loop of :func:`bpe_train`, replayed in Python
-    over the collected (word, freq, toks) rows: freq-weighted adjacent
-    pair counts as Python ints, the top pair by ``desc(cnt), asc(l),
-    asc(r)`` in Spark's binary (UTF-8 byte) string order, a stop when
-    no pair remains, and the greedy left-to-right rewrite. Returns
-    (merges, final (word, freq, toks) rows)."""
+    """The merge loop over the collected (word, freq, toks) rows:
+    freq-weighted adjacent pair counts as Python ints, the top pair by
+    ``desc(cnt), asc(l), asc(r)`` in Spark's binary (UTF-8 byte)
+    string order, a stop when no pair remains, and the greedy
+    left-to-right rewrite. Returns (merges, final (word, freq, toks)
+    rows)."""
     state = [(r["word"], r["freq"], list(r["toks"])) for r in rows]
     merges: list[tuple[int, str, str, int]] = []
     for rank in range(1, n_merges + 1):
@@ -203,78 +114,28 @@ def bpe_train(
     docs: DataFrame,
     n_merges: int,
     text_col: str = "text",
-    recache_every: int = 1,
 ) -> tuple[list[tuple[int, str, str, int]], DataFrame]:
     """Train ``n_merges`` BPE merges on the corpus.
 
     Returns (merges, words): ``merges`` is the learned merge table
     [(merge_rank, left, right, pair_count)] — rank 1 first — and
     ``words`` the final (word, freq, toks) vocabulary state with all
-    merges applied (lazy; reuse it to encode or continue training).
+    merges applied (a DataFrame over the driver's rows; reuse it to
+    encode or continue training).
 
-    Two paths, one result. When the vocabulary has at most
-    ``_DRIVER_VOCAB_ROWS`` rows (one LIMIT-bounded collect decides and
-    fetches), the merges are learned in Python on the driver and
-    ``words`` is a DataFrame over the driver's rows; over the bound,
-    one Spark pair-count job chain runs per merge and ``words`` is a
-    local checkpoint of the last state. The bound counts rows, not
-    bytes: a vocabulary of unusually long words costs the driver more
-    memory per row than the bound suggests. ``recache_every`` applies
-    to the Spark loop only.
+    The word-frequency aggregate runs in Spark; its (word, freq, toks)
+    rows are collected once and the merges learned in Python on the
+    driver, with no Spark job per merge. The whole vocabulary must fit
+    in driver memory, which depends on its bytes, not its row count:
+    unusually long words cost more per row.
     """
     if n_merges < 1:
         raise ValueError("n_merges must be >= 1")
     words = word_frequencies(docs, text_col).withColumn(
         "toks", F.split("word", "")
     )
-    words = words.cache()
-    rows = collect_within(words, _DRIVER_VOCAB_ROWS)
-    if rows is not None:
-        words.unpersist()
-        merges, state = _train_on_driver(rows, n_merges)
-        # the Spark rewrite makes `toks` elements nullable: take its
-        # schema (analysis only, no job) so both paths' schemas match
-        schema = words.schema
-        if merges:
-            schema = _merge_rewrite(words, merges[0][1], merges[0][2]).schema
-        return merges, words.sparkSession.createDataFrame(state, schema)
-    cached = [words]
-    merges: list[tuple[int, str, str, int]] = []
-    for rank in range(1, n_merges + 1):
-        top = (
-            _pair_counts(words)
-            .orderBy(F.desc("cnt"), F.asc("l"), F.asc("r"))
-            .take(1)
-        )
-        # that take() scanned every partition of `words` (the pair
-        # aggregate is a full scan), so the freshest cache is now
-        # materialized and its parent can be released — the r14
-        # optimization-round spelling of "materialize before dropping
-        # the parent": one job per merge (the pair-count action doubles
-        # as the cache fill) instead of a separate count() job. The
-        # parent stays cached until here, so the child always
-        # materializes from the cached state (one merge layer of
-        # codegen), never by replaying the whole merge chain.
-        while len(cached) > 1:
-            cached.pop(0).unpersist()
-        if not top:  # vocabulary fully merged — nothing left to count
-            break
-        l, r, cnt = top[0]["l"], top[0]["r"], top[0]["cnt"]
-        merges.append((rank, l, r, int(cnt)))
-        words = _merge_rewrite(words, l, r)
-        if rank % recache_every == 0:
-            words = words.cache()  # lazy: next loop's take() fills it
-            cached.append(words)
-    # Hand the final state's lifecycle to the GC: localCheckpoint
-    # truncates the k-layer expression lineage (recomputing it would
-    # re-hit the codegen blowup) and its blocks free when the caller
-    # drops the DataFrame — unlike cache entries, which sit in the
-    # CacheManager until an explicit unpersist nobody downstream can
-    # issue (the r7-review leak class). Then drop every cached state.
-    final = words.localCheckpoint(eager=True)
-    for df in cached:
-        df.unpersist()
-    return merges, final
+    merges, state = _train_on_driver(words.collect(), n_merges)
+    return merges, words.sparkSession.createDataFrame(state, words.schema)
 
 
 def bpe_encode_stats(words: DataFrame) -> DataFrame:
@@ -587,9 +448,10 @@ def unigram_train(
         .cast("int"),
     ).select("piece_rank", "piece", F.col("usage").cast("bigint").alias("usage"))
     words_state = _unigram_segment_state(words, cand, vocab)
-    # bpe_train's lifecycle contract: hand the results to the GC via
-    # localCheckpoint (blocks free when the caller drops the frames),
-    # then release every cache — nothing lingers in the CacheManager
+    # the lifecycle contract bpe_train keeps too: nothing lingers in
+    # the CacheManager — hand the results to the GC via localCheckpoint
+    # (blocks free when the caller drops the frames), then release
+    # every cache
     final_vocab = final_vocab.localCheckpoint(eager=True)
     words_state = words_state.localCheckpoint(eager=True)
     vocab_rel.unpersist()

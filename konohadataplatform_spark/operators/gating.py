@@ -13,12 +13,6 @@ shuffled join) from the measured size of a maybe-small relation:
   probe job costs O(bound) rows of the side's plan, never a full
   materialization (r12 ADVICE).
 
-When the small path needs the side's ROWS on the driver (a
-vocabulary-sized training loop run in Python), gate with
-:func:`collect_within` instead: one ``limit(bound + 1).collect()``
-both decides and fetches, so there is no probe job followed by a
-collect job. It returns the rows, or None over the bound.
-
 Gates change EXECUTION strategy only — every caller's over-bound
 path is parity-tested to return bit-identical rows, so no oracle
 depends on a gate decision.
@@ -31,7 +25,7 @@ unchanged and the probe stays LIMIT-bounded.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Row
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -41,16 +35,6 @@ def probe_within(side: DataFrame, bound: int) -> bool:
     answer is known."""
     bound = int(bound)
     return side.limit(bound + 1).count() <= bound
-
-
-def collect_within(side: DataFrame, bound: int) -> list[Row] | None:
-    """The rows of ``side`` when it has at most ``bound`` of them, else
-    None — the driver-side twin of :func:`probe_within`: one
-    ``limit(bound + 1).collect()`` job decides and fetches, and never
-    brings more than ``bound + 1`` rows to the driver."""
-    bound = int(bound)
-    rows = side.limit(bound + 1).collect()
-    return rows if len(rows) <= bound else None
 
 
 _HUGE_BYTES = 1 << 62

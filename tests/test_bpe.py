@@ -1,113 +1,81 @@
 """BPE merge trainer (operators/bpe.py): greedy-overlap semantics,
-deterministic tie-breaks, adversarial tokens, cache hygiene — each on
-both training paths (the driver loop under the vocabulary-row bound,
-the Spark loop over it), which must agree bit for bit."""
+deterministic tie-breaks, adversarial tokens, cache hygiene, parity
+with the DuckDB oracle chain on adversarial corpora, and a job count
+that does not grow with the number of merges."""
 
 from __future__ import annotations
 
+import duckdb
 import pytest
 from pyspark.sql import functions as F
 
-from konohadataplatform_spark.operators import bpe
 from konohadataplatform_spark.operators.bpe import (
     bpe_encode_stats,
     bpe_train,
     word_frequencies,
 )
 
-# No vocabulary, not even an empty one, has at most -1 rows: a bound
-# of -1 sends every call down the Spark loop.
-_SPARK_LOOP_BOUND = -1
-
-
-@pytest.fixture()
-def each_path(monkeypatch):
-    """Callable: iterate it to run the loop body once per training
-    path, the driver loop first, then the Spark loop."""
-
-    def paths():
-        for bound in (bpe._DRIVER_VOCAB_ROWS, _SPARK_LOOP_BOUND):
-            monkeypatch.setattr(bpe, "_DRIVER_VOCAB_ROWS", bound)
-            yield
-
-    return paths
-
 
 def _toks(words, word):
     return list(words.where(F.col("word") == word).first()["toks"])
 
 
-def test_greedy_left_to_right_overlap(spark, each_path):
-    for _ in each_path():
-        # "aaaa" under (a,a): greedy takes 0 and 2 -> [aa, aa];
-        # "aaa": takes 0 only -> [aa, a]
-        docs = spark.createDataFrame(
-            [(1, "aaaa aaa aaaa")], ["doc_id", "text"]
-        )
-        merges, words = bpe_train(docs, 1)
-        assert merges[0][1:3] == ("a", "a")
-        assert _toks(words, "aaaa") == ["aa", "aa"]
-        assert _toks(words, "aaa") == ["aa", "a"]
+def test_greedy_left_to_right_overlap(spark):
+    # "aaaa" under (a,a): greedy takes 0 and 2 -> [aa, aa];
+    # "aaa": takes 0 only -> [aa, a]
+    docs = spark.createDataFrame([(1, "aaaa aaa aaaa")], ["doc_id", "text"])
+    merges, words = bpe_train(docs, 1)
+    assert merges[0][1:3] == ("a", "a")
+    assert _toks(words, "aaaa") == ["aa", "aa"]
+    assert _toks(words, "aaa") == ["aa", "a"]
 
 
-def test_tie_break_lexicographic(spark, each_path):
-    for _ in each_path():
-        # (a,b) and (b,a) both appear twice; (a,b) < (b,a) must win
-        docs = spark.createDataFrame(
-            [(1, "ab ab ba ba")], ["doc_id", "text"]
-        )
-        merges, _ = bpe_train(docs, 1)
-        assert merges[0][1:3] == ("a", "b")
+def test_tie_break_lexicographic(spark):
+    # (a,b) and (b,a) both appear twice; (a,b) < (b,a) must win
+    docs = spark.createDataFrame([(1, "ab ab ba ba")], ["doc_id", "text"])
+    merges, _ = bpe_train(docs, 1)
+    assert merges[0][1:3] == ("a", "b")
 
 
-def test_merge_counts_freq_weighted(spark, each_path):
-    for _ in each_path():
-        docs = spark.createDataFrame(
-            [(1, "the the"), (2, "the")], ["doc_id", "text"]
-        )
-        merges, _ = bpe_train(docs, 2)
-        # (h,e) ties (t,h) at 3 each; lexicographic -> (h,e); then (t,he)
-        assert merges[0][1:4] == ("h", "e", 3)
-        assert merges[1][1:4] == ("t", "he", 3)
+def test_merge_counts_freq_weighted(spark):
+    docs = spark.createDataFrame(
+        [(1, "the the"), (2, "the")], ["doc_id", "text"]
+    )
+    merges, _ = bpe_train(docs, 2)
+    # (h,e) ties (t,h) at 3 each; lexicographic -> (h,e); then (t,he)
+    assert merges[0][1:4] == ("h", "e", 3)
+    assert merges[1][1:4] == ("t", "he", 3)
 
 
-def test_adversarial_tokens_quoted(spark, each_path):
-    for _ in each_path():
-        # tokens containing SQL-literal metacharacters must round-trip
-        # through the expression rewrite
-        docs = spark.createDataFrame(
-            [(1, "a'b a'b a\\b a\\b")], ["doc_id", "text"]
-        )
-        merges, words = bpe_train(docs, 2)
-        pairs = {(m[1], m[2]) for m in merges}
-        assert (
-            ("a", "'") in pairs or ("'", "b") in pairs or ("a", "\\") in pairs
-        )
-        # every word fully rewritten without analysis errors
-        assert words.count() == 2
+def test_adversarial_tokens_quoted(spark):
+    # tokens containing SQL-literal metacharacters must round-trip
+    # through training
+    docs = spark.createDataFrame([(1, "a'b a'b a\\b a\\b")], ["doc_id", "text"])
+    merges, words = bpe_train(docs, 2)
+    pairs = {(m[1], m[2]) for m in merges}
+    assert ("a", "'") in pairs or ("'", "b") in pairs or ("a", "\\") in pairs
+    # every word fully rewritten without analysis errors
+    assert words.count() == 2
 
 
-def test_stops_when_fully_merged(spark, each_path):
-    for _ in each_path():
-        docs = spark.createDataFrame([(1, "ab ab")], ["doc_id", "text"])
-        merges, words = bpe_train(docs, 10)
-        assert len(merges) == 1  # single word collapses after one merge
-        assert _toks(words, "ab") == ["ab"]
+def test_stops_when_fully_merged(spark):
+    docs = spark.createDataFrame([(1, "ab ab")], ["doc_id", "text"])
+    merges, words = bpe_train(docs, 10)
+    assert len(merges) == 1  # single word collapses after one merge
+    assert _toks(words, "ab") == ["ab"]
 
 
-def test_no_cached_relations_leak(spark, each_path):
+def test_no_cached_relations_leak(spark):
     """Training must leave NOTHING in the SQL CacheManager: every
     intermediate vocab state is unpersisted, and the returned final
-    state is a localCheckpoint (Spark loop) or a DataFrame over the
-    driver's rows (driver loop) — GC-managed, freed when the caller
-    drops the DataFrame, deliberately NOT a CacheManager entry nobody
-    can release."""
-    for _ in each_path():
-        spark.catalog.clearCache()
-        docs = spark.createDataFrame([(1, "aa bb aa")], ["doc_id", "text"])
-        merges, words = bpe_train(docs, 2)
-        words.count()
-        assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    state is a DataFrame over the driver's rows (GC-managed, freed
+    when the caller drops the DataFrame — deliberately NOT a
+    CacheManager entry nobody can release)."""
+    spark.catalog.clearCache()
+    docs = spark.createDataFrame([(1, "aa bb aa")], ["doc_id", "text"])
+    merges, words = bpe_train(docs, 2)
+    words.count()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_word_frequencies_drops_empties(spark):
@@ -116,31 +84,58 @@ def test_word_frequencies_drops_empties(spark):
     assert rows == {"a": 2, "b": 1}
 
 
-def test_encode_stats_shape(spark, each_path):
-    for _ in each_path():
-        docs = spark.createDataFrame([(1, "ab ab cd")], ["doc_id", "text"])
-        _, words = bpe_train(docs, 1)
-        row = bpe_encode_stats(words).first()
-        assert row["n_words"] == 2
-        # ab -> [ab] (1 tok, freq 2), cd -> [c, d]
-        assert row["total_tokens"] == 2 * 1 + 1 * 2
-        assert row["vocab_size"] == 3  # ab, c, d
+def test_encode_stats_shape(spark):
+    docs = spark.createDataFrame([(1, "ab ab cd")], ["doc_id", "text"])
+    _, words = bpe_train(docs, 1)
+    row = bpe_encode_stats(words).first()
+    assert row["n_words"] == 2
+    # ab -> [ab] (1 tok, freq 2), cd -> [c, d]
+    assert row["total_tokens"] == 2 * 1 + 1 * 2
+    assert row["vocab_size"] == 3  # ab, c, d
 
 
-def test_encode_docs_memoized_join_and_oov(spark, each_path):
+def test_encode_docs_memoized_join_and_oov(spark):
     from konohadataplatform_spark.operators.bpe import bpe_encode_docs
 
-    for _ in each_path():
-        train = spark.createDataFrame([(1, "ab ab cd")], ["doc_id", "text"])
-        _, words = bpe_train(train, 1)  # merges (a,b) -> ab
-        new = spark.createDataFrame(
-            [(7, "ab cd"), (8, "zzz ab")], ["doc_id", "text"]
-        )
-        rows = {r["doc_id"]: (r["n_words"], r["n_bpe_tokens"])
-                for r in bpe_encode_docs(new, words).collect()}
-        # ab -> 1 token, cd -> 2; OOV "zzz" falls back to char count 3
-        assert rows[7] == (2, 3)
-        assert rows[8] == (2, 4)
+    train = spark.createDataFrame([(1, "ab ab cd")], ["doc_id", "text"])
+    _, words = bpe_train(train, 1)  # merges (a,b) -> ab
+    new = spark.createDataFrame(
+        [(7, "ab cd"), (8, "zzz ab")], ["doc_id", "text"]
+    )
+    rows = {r["doc_id"]: (r["n_words"], r["n_bpe_tokens"])
+            for r in bpe_encode_docs(new, words).collect()}
+    # ab -> 1 token, cd -> 2; OOV "zzz" falls back to char count 3
+    assert rows[7] == (2, 3)
+    assert rows[8] == (2, 4)
+
+
+def _oracle_train(texts, n_merges):
+    """(merges, sorted (word, freq, toks) rows) from the DuckDB oracle
+    chain that replays bpe_train for the q_bpe_* queries."""
+    from konohadataplatform_spark.queries.llmdata import _bpe_oracle_chain
+
+    con = duckdb.connect()
+    try:
+        con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
+        for doc in enumerate(texts):
+            con.execute("INSERT INTO documents VALUES (?, ?)", doc)
+        chain = _bpe_oracle_chain(n_merges)
+        merges = con.execute(
+            chain
+            + " UNION ALL ".join(
+                f"SELECT * FROM t{k}" for k in range(1, n_merges + 1)
+            )
+            + " ORDER BY merge_rank"
+        ).fetchall()
+        # a t{k} with no pair left is empty, and so is every later w{k}
+        rows = con.execute(
+            chain + f" SELECT word, freq, toks FROM w{len(merges)}"
+        ).fetchall()
+    finally:
+        con.close()
+    return [tuple(m) for m in merges], sorted(
+        (w, f, list(t)) for w, f, t in rows
+    )
 
 
 @pytest.mark.parametrize(
@@ -166,27 +161,23 @@ def test_encode_docs_memoized_join_and_oov(spark, each_path):
         "ties", "unicode", "quotes", "one_char", "exhausted", "empty", "blank"
     ],
 )
-def test_driver_and_spark_loops_agree(spark, each_path, texts, n_merges):
-    """Equal merges, equal sorted (word, freq, toks) rows and an equal
-    schema from both paths."""
+def test_matches_duckdb_oracle_chain(spark, texts, n_merges):
+    """Equal merges and equal sorted (word, freq, toks) rows from
+    bpe_train and the DuckDB oracle, an independent engine."""
     docs = spark.createDataFrame(
         list(enumerate(texts)), "doc_id bigint, text string"
     )
-    out = []
-    for _ in each_path():
-        merges, words = bpe_train(docs, n_merges)
-        rows = sorted(
-            (r["word"], r["freq"], list(r["toks"])) for r in words.collect()
-        )
-        out.append((merges, rows, words.schema))
-    driver, spark_loop = out
-    assert driver == spark_loop
+    merges, words = bpe_train(docs, n_merges)
+    rows = sorted(
+        (r["word"], r["freq"], list(r["toks"])) for r in words.collect()
+    )
+    assert (merges, rows) == _oracle_train(texts, n_merges)
 
 
-def test_driver_loop_job_count_flat_in_merges(spark, group_jobs):
-    """Under the bound, training launches the same number of jobs
-    whatever the merge count: the Spark loop adds a job chain per
-    merge, the driver loop none."""
+def test_job_count_flat_in_merges(spark, group_jobs):
+    """Training launches the same number of jobs whatever the merge
+    count: the merges are learned on the driver, not one Spark job
+    chain per merge."""
     docs = spark.createDataFrame(
         [(1, "abcdefghijkl abcdefghijkl")], ["doc_id", "text"]
     )

@@ -8,7 +8,6 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from konohadataplatform_spark.operators.gating import (
-    collect_within,
     estimate_is_scan_grade,
     estimated_bytes,
     probe_small,
@@ -57,13 +56,6 @@ def test_probe_small_distrusts_non_scan_estimate(spark):
 def test_probe_within_limit_bounded(spark):
     assert probe_within(spark.range(10), 10) is True
     assert probe_within(spark.range(11), 10) is False
-
-
-def test_collect_within_at_and_over_bound(spark):
-    rows = collect_within(spark.range(10), 10)
-    assert sorted(r["id"] for r in rows) == list(range(10))
-    assert collect_within(spark.range(11), 10) is None
-    assert collect_within(spark.range(0), 0) == []
 
 
 def test_scan_grade_parquet_plans(spark, tmp_path):
